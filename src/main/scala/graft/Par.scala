@@ -52,6 +52,11 @@ object Par {
     "spark.jobGroup.id", "spark.job.interruptOnCancel",
     "spark.job.description", "spark.scheduler.pool")
 
+  /** Per pool thread: the SparkContext whose local properties it last
+    * set, so a branch submitted with no active session can still clear
+    * the values an earlier branch left on this thread. */
+  private val lastContext = new ThreadLocal[org.apache.spark.SparkContext]
+
   private def submit[A](a: => A): java.util.concurrent.Future[A] = {
     // snapshot on the CALLER's thread; null values still ride along so
     // a reused pool thread's stale property is cleared, not kept
@@ -61,8 +66,12 @@ object Par {
       .map(sc => (sc, inheritKeys.map(k => k -> sc.getLocalProperty(k))))
     pool.submit(new java.util.concurrent.Callable[A] {
       def call(): A = {
-        snap.foreach { case (sc, kvs) =>
-          kvs.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        snap match {
+          case Some((sc, kvs)) =>
+            kvs.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+            lastContext.set(sc)
+          case None => Option(lastContext.get).foreach(sc =>
+            inheritKeys.foreach(sc.setLocalProperty(_, null)))
         }
         a
       }

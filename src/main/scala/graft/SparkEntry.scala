@@ -179,21 +179,21 @@ object SparkEntry {
     if (evictionHooked.putIfAbsent(s, java.lang.Boolean.TRUE) == null)
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          componentsMemo.keySet.removeIf(k => k._1 eq s)
-          dupPairsMemo.keySet.removeIf(k => k._1 eq s)
-          nearDupSweepMemo.keySet.removeIf(k => k._1 eq s)
-          oldLabelsMemo.keySet.removeIf(k => k._1 eq s)
-          pqIndexMemo.keySet.removeIf(k => k._1 eq s)
-          residualPqIndexMemo.keySet.removeIf(k => k._1 eq s)
-          grownPqIndexMemo.keySet.removeIf(k => k._1 eq s)
-          grownResidualPqIndexMemo.keySet.removeIf(k => k._1 eq s)
-          quantLadderMemo.keySet.removeIf(k => k._1 eq s)
-          assetSigsMemo.keySet.removeIf(k => k._1 eq s)
-          evictionHooked.remove(s)
-          ()
-        }
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          evictSession(s)
       })
+
+  /** Drops every memo entry of session `s`. */
+  private[graft] def evictSession(s: SparkSession): Unit = {
+    Seq[java.util.concurrent.ConcurrentHashMap[(SparkSession, String), _]](
+      componentsMemo, dupPairsMemo, nearDupSweepMemo, qualitySweepMemo,
+      lshSweepMemo, bpeEncodedMemo, oldLabelsMemo, pqIndexMemo,
+      residualPqIndexMemo, grownPqIndexMemo, grownResidualPqIndexMemo,
+      quantLadderMemo, assetSigsMemo)
+      .foreach(_.keySet.removeIf(k => k._1 eq s))
+    evictionHooked.remove(s)
+    ()
+  }
 
   /** q135's "previous crawl" labelling: components over the old-batch
     * (id % 7 ≠ 0) corpus. In a real incremental deployment this is

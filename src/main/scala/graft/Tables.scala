@@ -55,17 +55,26 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val raw = spark.read.parquet(s"$sfDir/$name.parquet")
     val dp = spark.sparkContext.defaultParallelism
-    val floor = spark.conf.get("spark.graft.spread.floor", "8").toInt
-    val tgtBytes = spark.conf
-      .get("spark.graft.spread.targetPartitionBytes", (16L << 20).toString)
-      .toLong
+    val floor = spreadConf(spark, "spark.graft.spread.floor", 8L)
+    val tgtBytes =
+      spreadConf(spark, "spark.graft.spread.targetPartitionBytes", 16L << 20)
     val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
     val byBytes =
       (bytes / tgtBytes).min(BigInt(Int.MaxValue)).toInt
-    val target = math.min(dp, math.max(floor, byBytes))
+    val target = math.min(dp, math.max(floor, byBytes)).toInt
     if (raw.queryExecution.toRdd.getNumPartitions < target)
       raw.repartition(target)
     else raw
+  }
+
+  /** A spread conf: a positive integer, else an IllegalArgumentException
+    * naming the key (a 0 target would divide by zero at every load). */
+  private def spreadConf(spark: SparkSession, key: String,
+                         default: Long): Long = {
+    val raw = spark.conf.get(key, default.toString)
+    raw.trim.toLongOption.filter(_ >= 1L).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$raw'"))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -1,6 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM training-data pipelines — extension
@@ -264,11 +266,18 @@ object Dedup {
     * ⌈log₂ L⌉ rounds, not L.
     *
     * Scale: the input contracts to distinct (key, ts) before
-    * anything iterates; every round is two equi-joins on (key, ts)
-    * over that contraction plus one count action, each round's
-    * frames localCheckpoint'd to cut lineage (the connected-
-    * components discipline). Horizon state never exists as rows —
-    * the RANGE frame reads it off the sort order map-side. */
+    * anything iterates, in one keyed pass, localCheckpoint'd. When
+    * that contraction fits the session's broadcast threshold (see
+    * [[fetchIfSmall]]) the chains finish on the driver: one bounded
+    * fetch, then the exact greedy fold per key — the two-phase shape
+    * of Kiveris et al. (SoCC 2014), which spares a small input the
+    * ~log₂ L rounds of driver round-trips that otherwise dominate its
+    * wall time. Larger inputs pay only that bounded read and then run
+    * the doubling loop: every round is two equi-joins on (key, ts)
+    * over the contraction plus one count action, each round's frames
+    * localCheckpoint'd to cut lineage and the superseded ones released
+    * (the connected-components discipline). Horizon state never exists
+    * as rows — the RANGE frame reads it off the sort order map-side. */
   def dedupWithinHorizon(df: DataFrame, keyCols: Seq[String],
                          tsCol: String, horizonSec: Long): DataFrame = {
     require(keyCols.nonEmpty, "dedupWithinHorizon needs key columns")
@@ -299,6 +308,33 @@ object Dedup {
       .withColumn("_nxt", min(col("_t")).over(fw))
       .dropDuplicates("_k", "_t")
       .localCheckpoint(true, lvl)
+    def emit(kept: DataFrame): DataFrame =
+      kept.select(keyCols.map(k => col(s"_k.$k").as(k)) :+
+        col("_t").as(tsCol): _*)
+    fetchIfSmall(base) match {
+      case Some(rows) =>
+        release(base)
+        // the greedy fold itself: keep a key's first event, then every
+        // event strictly past the horizon of the last KEPT one
+        val kept = rows.groupBy(_.get(0)).iterator.flatMap { case (k, rs) =>
+          rs.map(_.getLong(1)).sorted.foldLeft(List.empty[Long]) {
+            case (acc @ last :: _, t) if t - last <= horizonSec => acc
+            case (acc, t) => t :: acc
+          }.map(t => Row(k, t))
+        }.toSeq
+        // the distributed loop's (_k, _t) schema, read off its plan
+        val schema = base.groupBy(col("_k")).agg(min(col("_t")).as("_t")).schema
+        emit(df.sparkSession.createDataFrame(kept.asJava, schema))
+      case None => emit(horizonDoubling(base, lvl))
+    }
+  }
+
+  /** The distributed finish of [[dedupWithinHorizon]]: pointer doubling
+    * over the checkpointed (_k, _t, _nxt) contraction `base`, which it
+    * releases. Returns the kept (_k, _t) rows. */
+  private def horizonDoubling(base: DataFrame,
+                              lvl: org.apache.spark.storage.StorageLevel)
+      : DataFrame = {
     // f(t): first event strictly past the horizon of t. Chain-end rows
     // (null f) are DROPPED from the jump map: they can never produce a
     // step, and as a jump target a missing row and a null-next row are
@@ -309,6 +345,7 @@ object Dedup {
     // events instead of rounds x events)
     var m = base.filter(col("_nxt").isNotNull)
       .select(col("_k"), col("_t"), col("_nxt"))
+    var mOwned = false // m is base's projection until the first squaring
     var reach = base.groupBy(col("_k")).agg(min(col("_t")).as("_t"))
       .localCheckpoint(true, lvl)
     var size = reach.count()
@@ -348,15 +385,47 @@ object Dedup {
         })
       grown = nextSize > size
       if (grown) {
+        release(reach)
+        if (mOwned) release(m)
         reach = next
         size = nextSize
         m = nextM
-      }
+        mOwned = true
+      } else release(next, nextM)
       rounds += 1
     }
-    reach.select(keyCols.map(k => col(s"_k.$k").as(k)) :+
-      col("_t").as(tsCol): _*)
+    release(base)
+    if (mOwned) release(m)
+    reach
   }
+
+  /** All rows of the (checkpointed) working set `df` when it is small
+    * enough to finish an iterative operator on the driver, else None.
+    * Small means at most the session's `spark.sql.autoBroadcastJoinThreshold`
+    * (the size it already agrees to ship whole to every task) in rows
+    * of `df`'s schema; a threshold ≤ 0 disables the local finish,
+    * exactly as it disables broadcast. One bounded fetch both decides
+    * and fetches, so the large path pays only that read. */
+  private def fetchIfSmall(df: DataFrame): Option[Array[Row]] = {
+    val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bound = math.min(bytes / math.max(1, df.schema.defaultSize),
+      Int.MaxValue - 1L).toInt
+    if (bound <= 0) None
+    else Some(df.take(bound + 1)).filter(_.length <= bound)
+  }
+
+  /** Frees the storage of localCheckpoint'd frames nothing reads any
+    * more — deterministic release instead of waiting for the
+    * ContextCleaner to notice them on a GC. Every RDD leaf of each
+    * plan is unpersisted, so pass only frames that read nothing but
+    * checkpoints the caller owns. */
+  private[graft] def release(dfs: DataFrame*): Unit = dfs.foreach(
+    _.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+        ()
+      case _ => ()
+    })
 
   // ===== exact n-gram Jaccard ==============================================
 
@@ -686,17 +755,17 @@ object Dedup {
     val sigs = minhashSignatures(docs, k, idCol, textCol, scheme)
       .localCheckpoint(
         true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    minhashPairsFromSigs(sigs, threshold, k, bands, maxBucketSize, scheme)
+    withEstJaccard(
+        bandedCandidates(sigs, k, Seq(bands), maxBucketSize, scheme), sigs, k)
+      .filter(col("est_jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** The banding + verify tail of [[minhashPairs]] over PREBUILT
-    * (already materialized) signatures — factored out so a sweep over
-    * band settings ([[lshBandSweep]]) pays the signature pass once. */
-  private def minhashPairsFromSigs(sigs: DataFrame, threshold: Double,
-                                   k: Int, bands: Int,
-                                   maxBucketSize: Int,
-                                   scheme: HashScheme): DataFrame = {
-    val cand = bandedCandidates(sigs, k, bands, maxBucketSize, scheme)
+  /** Signature verification: attaches `est_jaccard` (matching
+    * components / k, truncated to 4 dp) to each candidate id pair. */
+  private def withEstJaccard(cand: DataFrame, sigs: DataFrame,
+                             k: Int): DataFrame = {
     // merge PINNED: the scaladoc's "spillable sort-merge" contract was
     // only a planner default — a low estimate on `cand` (stats
     // propagate from the checkpointed signatures) would flip it to a
@@ -708,50 +777,56 @@ object Dedup {
         .hint("merge"), Seq("doc_b"))
     val est = size(filter(zip_with(col("mh_a"), col("mh_b"),
       (x, y) => x === y), b => b)) / lit(k.toDouble)
-    withSigs
-      .withColumn("est_jaccard", TextAnalysis.trunc4(est))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    withSigs.withColumn("est_jaccard", TextAnalysis.trunc4(est))
+      .drop("mh_a", "mh_b")
   }
 
   /** Just the candidate-generation half: banded LSH buckets → distinct
-    * id pairs (doc_a < doc_b), BEFORE signature verification — the raw
-    * candidate volume is the verify-stage cost the band setting
-    * actually buys or saves, so the sweep reports it per point. */
-  private def bandedCandidates(sigs: DataFrame, k: Int, bands: Int,
+    * id pairs (doc_a < doc_b), BEFORE signature verification, for
+    * every band setting of `bandsList` at once. Setting i's bands are
+    * tagged with bit 2^i, buckets are keyed by (bit, band, hash), and
+    * each pair carries `_mask`: the OR of the bits of the settings
+    * whose buckets produced it. The raw candidate volume per setting
+    * is the verify-stage cost the band setting actually buys or
+    * saves, so the sweep reports it per point. */
+  private def bandedCandidates(sigs: DataFrame, k: Int, bandsList: Seq[Int],
                                maxBucketSize: Int,
                                scheme: HashScheme): DataFrame = {
-    require(k % bands == 0, s"bands=$bands must divide k=$k")
-    val r = k / bands
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        scheme.band(slice(col("mh"), b * r + 1, r)).as("bh"))
+    require(bandsList.size <= 63, "at most 63 band settings (one mask bit each)")
+    val bandStructs = bandsList.zipWithIndex.flatMap { case (bands, i) =>
+      require(k % bands == 0, s"bands=$bands must divide k=$k")
+      val r = k / bands
+      (0 until bands).map { b =>
+        struct(lit(1L << i).as("bit"), lit(b).as("band"),
+          scheme.band(slice(col("mh"), b * r + 1, r)).as("bh"))
+      }
     }
     val banded = sigs.select(
       col("id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+      .select(col("id"), col("bb.bit").as("bit"), col("bb.band").as("band"),
+        col("bb.bh").as("bh"))
+    val bucket = Seq("bit", "band", "bh")
     // Optional degenerate-bucket guard: a bucket of m near-identical docs
     // yields m²/2 candidates; above the cap that is better handled by
     // exact dedup first. Skipping is explicit opt-in via maxBucketSize.
     val bounded = if (maxBucketSize == Int.MaxValue) banded else {
-      val sizes = banded.groupBy(col("band"), col("bh"))
+      val sizes = banded.groupBy(bucket.map(col): _*)
         .agg(count(lit(1)).as("_bsz"))
         .filter(col("_bsz") <= maxBucketSize)
       // bucket-cardinality side builds per partition (never the stream)
-      banded.join(sizes.select(col("band"), col("bh")).hint("shuffle_hash"),
-        Seq("band", "bh"))
+      banded.join(sizes.select(bucket.map(col): _*).hint("shuffle_hash"),
+        bucket)
     }
     // Candidates carry ONLY id pairs — carrying both k-long signatures
     // through the bucket join multiplies its shuffle/memory footprint by
     // ~2k×8 bytes per pair and OOMs on duplicate-heavy corpora (found by
-    // ScaleProbe at 1M docs); the signature re-joins below are spillable
+    // ScaleProbe at 1M docs); the signature re-joins are spillable
     // sort-merge joins keyed on id.
     bounded.as("a")
-      .join(bounded.as("b"), Seq("band", "bh"))
+      .join(bounded.as("b"), bucket)
       .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
+      .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+      .agg(bit_or(col("bit")).as("_mask"))
   }
 
   /** LSH band-count tuning sweep — the MinHash analogue of the IVF
@@ -777,12 +852,18 @@ object Dedup {
     * converge (easy corpora saturate recall at every setting; the
     * cost still triples from 4 to 16 bands).
     *
-    * Scale: signatures and the exact reference are each one pass,
-    * eagerly pinned (3 band settings × 2 consumers each would
-    * otherwise replay them); per-setting work is the banding explode
-    * (bands × corpus skinny rows) + the bucket equi-join.
-    * `maxBucketSize` bounds that join's per-bucket blowup exactly as
-    * in [[minhashPairs]] — the default Int.MaxValue keeps the strict
+    * Scale: ONE plan for every setting, over one eagerly pinned
+    * signature pass (its three readers — banding and the two verify
+    * joins — must not replay it): one banding explode of all settings'
+    * bands (Σ bands × corpus skinny rows), one bucket self-join, the
+    * distinct candidate pairs with their per-setting membership mask,
+    * one signature verify, one full outer join against the exact
+    * pairs, and one conditional-count aggregate, exploded back to one
+    * row per setting. The mask keeps every count exact per setting
+    * without leaning on the nesting, so a finite `maxBucketSize` stays
+    * correct; at most 63 settings.
+    * `maxBucketSize` bounds the bucket join's per-bucket blowup exactly
+    * as in [[minhashPairs]] — the default Int.MaxValue keeps the strict
     * nesting theorem (`recall_monotone_ok` pins it) but makes the
     * bucket join unbounded on duplicate-heavy corpora, so it is a
     * hard precondition that the input be a SAMPLE sized for it (the
@@ -813,32 +894,37 @@ object Dedup {
         "— the nesting the monotone flag pins)")
     val sigs = minhashSignatures(docs, k, idCol, textCol, scheme)
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val cand = withEstJaccard(
+        bandedCandidates(sigs, k, bandsList, maxBucketSize, scheme), sigs, k)
+      .select(col("doc_a"), col("doc_b"), col("_mask"),
+        (col("est_jaccard") >= threshold).as("_ok"))
     val exact = jaccardPairs(docs, threshold, maxPostings, idCol, textCol)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val rows = bandsList.map { b =>
-      val ls = minhashPairsFromSigs(sigs, threshold, k, b,
-          maxBucketSize, scheme)
-        .select(col("doc_a"), col("doc_b"))
-      val ne = exact.agg(count(lit(1)).as("n_exact"))
-      val nr = bandedCandidates(sigs, k, b, maxBucketSize, scheme)
-        .agg(count(lit(1)).as("n_raw_candidates"))
-      val nc = ls.agg(count(lit(1)).as("n_candidate"))
-      val com = exact.join(ls, Seq("doc_a", "doc_b"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-      // 1-row broadcast scalar attachments
-      ne.join(broadcast(nr), lit(true))
-        .join(broadcast(nc), lit(true))
-        .join(broadcast(com), lit(true))
-        .select(lit(b.toLong).as("bands"), col("n_exact"),
-          col("n_raw_candidates"), col("n_candidate"), col("n_common"),
-          expr("CASE WHEN n_exact > 0 THEN " +
-            "n_common * 1000000 div n_exact END").as("recall_micro"),
-          expr("CASE WHEN n_candidate > 0 THEN " +
-            "n_common * 1000000 div n_candidate END")
-            .as("precision_micro"))
+      .select(col("doc_a"), col("doc_b"), lit(true).as("_ex"))
+    // null-safe conditional counts: an exact-only row has a null mask,
+    // a candidate-only row a null _ex — both read as "not counted"
+    def has(i: Int) = col("_mask").bitwiseAND(lit(1L << i)) =!= 0L
+    def n(c: Column) = count(when(c, 1))
+    val counts = bandsList.indices.flatMap { i =>
+      Seq(n(has(i)).as(s"_r$i"), n(has(i) && col("_ok")).as(s"_c$i"),
+        n(has(i) && col("_ok") && col("_ex")).as(s"_m$i"))
     }
-    val sweep = rows.reduce(_.unionAll(_))
+    val sweep = cand.join(exact, Seq("doc_a", "doc_b"), "full_outer")
+      .agg(count(col("_ex")).as("n_exact"), counts: _*)
+      .select(col("n_exact"), explode(array(bandsList.zipWithIndex.map {
+        case (b, i) => struct(lit(b.toLong).as("bands"),
+          col(s"_r$i").as("n_raw_candidates"), col(s"_c$i").as("n_candidate"),
+          col(s"_m$i").as("n_common"))
+      }: _*)).as("p"))
+      .select(col("p.bands").as("bands"), col("n_exact"),
+        col("p.n_raw_candidates").as("n_raw_candidates"),
+        col("p.n_candidate").as("n_candidate"),
+        col("p.n_common").as("n_common"))
+      .select(col("*"),
+        expr("CASE WHEN n_exact > 0 THEN " +
+          "n_common * 1000000 div n_exact END").as("recall_micro"),
+        expr("CASE WHEN n_candidate > 0 THEN " +
+          "n_common * 1000000 div n_candidate END")
+          .as("precision_micro"))
     val w = Window.orderBy(col("bands"))
     sweep.withColumn("recall_monotone_ok",
         (coalesce(col("recall_micro"), lit(0L)) >=
@@ -1078,33 +1164,41 @@ object Dedup {
     * indirect chains (A–B, B–C with no A–C edge) collapse correctly
     * where the one-pass `survivors` approximation would keep C.
     *
-    * Scale: each round is a neighbor-min step (equi-join + aggregate on
-    * node ids) followed by TWO pointer-jumping steps (labels
-    * re-labelled through the stepped map, `comp := label(comp)`), so
-    * the label-travel distance grows d → 3(d+1) per round and
-    * convergence is O(log diameter) with a smaller round count than a
-    * single jump. Per-round driver round-trips are the fixed cost that
-    * dominates small graphs, so each round runs exactly TWO actions:
-    * the stepped checkpoint (the jumps self-join its map — without the
-    * materialization each branch would re-execute the edge join), and
-    * the next-labels checkpoint whose plan both jumps fuse into, with
-    * the convergence count read from an observe() metric on that same
-    * action instead of a separate count job. Returns
-    * (doc_id, component). */
+    * Scale: the bidirectional edge list is built once and
+    * checkpointed. When it fits the session's broadcast threshold (see
+    * [[fetchIfSmall]]) the labelling finishes on the driver: one
+    * bounded fetch, union-find, each node labelled with its
+    * component's minimum id — the label the distributed loop converges
+    * to, without its per-round driver round-trips (the two-phase shape
+    * of Kiveris et al., SoCC 2014). Larger edge lists pay only that
+    * bounded read, then propagate: each round is a neighbor-min step
+    * (equi-join + aggregate on node ids) followed by TWO pointer-
+    * jumping steps (labels re-labelled through the stepped map,
+    * `comp := label(comp)`), so the label-travel distance grows
+    * d → 3(d+1) per round and convergence is O(log diameter) with a
+    * smaller round count than a single jump. Per-round driver
+    * round-trips are the fixed cost, so each round runs exactly TWO
+    * actions: the stepped checkpoint (the jumps self-join its map —
+    * without the materialization each branch would re-execute the
+    * edge join), and the next-labels checkpoint whose plan both jumps
+    * fuse into, with the convergence count read from an observe()
+    * metric on that same action instead of a separate count job.
+    * Superseded checkpoints are released as the loop moves on.
+    * Returns (doc_id, component). */
   def components(pairs: DataFrame): DataFrame =
     componentsWithRounds(pairs)._1
 
   /** `components` plus the number of propagation rounds it ran —
     * exposed so tests can pin the convergence speedup of the
-    * double-jump (a chain graph must collapse in O(log₈ d) rounds). */
+    * double-jump (a chain graph must collapse in O(log₈ d) rounds).
+    * A local finish runs no propagation round and reports 0. */
   def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
     // DISK_ONLY for the edge set: a dup-heavy corpus yields 10⁸+ pairs
     // and the default deserialized MEMORY_AND_DISK blocks OOM'd the 1M-doc
     // probe; edges are scanned once per round, so disk reads are cheap
     // relative to the join. Labels are small (one row per node) and stay
-    // in memory, serialized. Stale per-round label blocks become
-    // unreachable on reassignment and the ContextCleaner reclaims them.
+    // in memory, serialized.
     // Both edge directions come from ONE pass over the pair plan
     // (explode of a 2-struct array) — a unionAll of pairs with its swap
     // re-executes the pair plan per branch (exchange reuse dedups the
@@ -1122,9 +1216,66 @@ object Dedup {
     // same single aggregate that enumerates the node set (every node
     // appears as v in the bidirectional edge list), so round one of the
     // propagation is free and chains of length ≤ 1 converge immediately.
-    var labels = edges.groupBy(col("v").as("id"))
+    val seed = edges.groupBy(col("v").as("id"))
       .agg(least(min(col("u")), col("v")).as("comp"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    def emit(labels: DataFrame): DataFrame =
+      labels.select(col("id").as("doc_id"), col("comp").as("component"))
+    // the local finish needs Spark's order on the ids: long doc ids and
+    // string names (Linkage) have it on the driver, as numeric and
+    // UTF-8 byte order; other id types, and null ids, take the loop
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    val lt: Option[(Any, Any) => Boolean] = edges.schema("u").dataType match {
+      case LongType => Some((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
+      case StringType => Some((a, b) =>
+        fromString(a.asInstanceOf[String])
+          .compareTo(fromString(b.asInstanceOf[String])) < 0)
+      case _ => None
+    }
+    val local = lt.flatMap(_ => fetchIfSmall(edges))
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    local match {
+      case Some(rows) =>
+        release(edges)
+        val labels = minLabels(rows.map(r => (r.get(0), r.get(1))), lt.get)
+        (emit(edges.sparkSession.createDataFrame(
+          labels.map { case (n, c) => Row(n, c) }.asJava, seed.schema)), 0)
+      case None =>
+        val (labels, rounds) = labelPropagation(edges, seed)
+        (emit(labels), rounds)
+    }
+  }
+
+  /** Union-find over an edge list; one (node, component minimum under
+    * `lt`) pair per node. Roots are always their component's minimum,
+    * so a root lookup is the label. */
+  private def minLabels(edges: Array[(Any, Any)],
+                        lt: (Any, Any) => Boolean): Seq[(Any, Any)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x // path compression
+      while (parent(y) != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (lt(ra, rb)) parent(rb) = ra else if (lt(rb, ra)) parent(ra) = rb
+    }
+    parent.keysIterator.toVector.map(n => (n, find(n)))
+  }
+
+  /** The distributed finish of [[componentsWithRounds]]: min-label
+    * propagation from `seed` over the checkpointed `edges`, which it
+    * releases. Returns the (id, comp) labels and the round count. */
+  private def labelPropagation(edges: DataFrame,
+                               seed: DataFrame): (DataFrame, Int) = {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    var labelsCp = seed.localCheckpoint(true, lvl) // the frame labels reads
+    var labels = labelsCp
     var changed = 1L
     var rounds = 0
     // every label-map join is PINNED shuffle_hash with the label side
@@ -1147,8 +1298,7 @@ object Dedup {
         .select(col("id"),
           least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
           col("comp").as("prev"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .localCheckpoint(true, lvl)
       // pointer jumps: follow the label one hop through the stepped
       // map (comp := stepped's label of comp). Any such re-label keeps
       // the invariant (labels only decrease, stay in-component, never
@@ -1165,8 +1315,7 @@ object Dedup {
       val next = jump(jump(stepped))
         .observe(obs, sum(when(col("comp") < col("prev"), 1L)
           .otherwise(0L)).as("changed"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .localCheckpoint(true, lvl)
       // the observe metric rides the checkpoint action — no count job.
       // That it does relies on Dataset.checkpoint running via withAction
       // (which posts QueryExecutionListener events) — a Spark internal,
@@ -1176,10 +1325,13 @@ object Dedup {
       // null metric (empty label frame — no pairs) means converged.
       changed = awaitMetric(obs, "changed").getOrElse(
         next.filter(col("comp") < col("prev")).count())
+      release(stepped, labelsCp)
+      labelsCp = next
       labels = next.drop("prev")
       rounds += 1
     }
-    (labels.select(col("id").as("doc_id"), col("comp").as("component")), rounds)
+    release(edges)
+    (labels, rounds)
   }
 
   /** Bounded wait for an `Observation` metric: Some(value) once the

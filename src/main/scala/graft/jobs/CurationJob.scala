@@ -1,5 +1,7 @@
 package graft.jobs
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -48,15 +50,26 @@ object CurationJob {
     * [[run]]; injected here so tests and alternative labellings can
     * reuse the recipe). */
   def curate(corpus: DataFrame, benchmark: DataFrame,
-             comps: DataFrame): (DataFrame, DataFrame) = {
+             comps: DataFrame): (DataFrame, DataFrame) =
+    split(corpus, gateFrame(corpus, benchmark, comps))
+
+  /** Every corpus doc with the columns the gates read: quality
+    * metrics, the election flag and the contamination flag. */
+  private def gateFrame(corpus: DataFrame, benchmark: DataFrame,
+                        comps: DataFrame): DataFrame = {
     val elect = Dedup.electRepresentatives(corpus, comps, col("n_chars"))
       .select(col("doc_id"), col("is_kept"))
     val flags = Curation.contamination(corpus, benchmark, n = 5)
       .select(col("doc_id"), lit(1L).as("_contam"))
-    val frame = TextAnalysis.withQuality(corpus)
+    TextAnalysis.withQuality(corpus)
       .join(elect, Seq("doc_id"))
       .join(flags, Seq("doc_id"), "left")
       .withColumn("_contam", coalesce(col("_contam"), lit(0L)))
+  }
+
+  /** (docs passing every gate, stage-lineage receipt) of a gate frame. */
+  private def split(corpus: DataFrame,
+                    frame: DataFrame): (DataFrame, DataFrame) = {
     val receipt = Curation.stageLineage(frame, gates)
     val kept = frame.filter(gates.map(_._2).reduce(_ && _))
       .select(corpus.columns.map(col): _*)
@@ -65,7 +78,14 @@ object CurationJob {
 
   /** Batch release build: read, split, label, curate, write curated
     * corpus + receipt side by side. Returns the receipt rows (tiny —
-    * one per stage) for the caller's log. */
+    * one per stage) for the caller's log.
+    *
+    * Scale: the gate frame is built ONCE and localCheckpoint'd — the
+    * corpus write and the receipt both read it — and released after,
+    * with the component labelling it was built from;
+    * the receipt is collected once and written from those rows. The
+    * component labelling finishes on the driver when its edge list is
+    * small (see [[graft.ext.Dedup.components]]). */
   def run(spark: SparkSession, docsDir: String, outDir: String,
           benchModulus: Int = 31): Array[Row] = {
     val all = spark.read.parquet(docsDir)
@@ -74,10 +94,15 @@ object CurationJob {
     // the q300 convention: components labelled over the FULL doc set
     val comps = Dedup.components(
       Dedup.coShinglePairs(all, minShared = 2, maxPostings = 1000))
-    val (kept, receipt) = curate(corpus, bench, comps)
+    val frame = gateFrame(corpus, bench, comps).localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val (kept, receipt) = split(corpus, frame)
+    val rows = receipt.collect()
     kept.write.mode("overwrite").parquet(s"$outDir/corpus")
-    receipt.write.mode("overwrite").parquet(s"$outDir/_receipt")
-    receipt.collect()
+    spark.createDataFrame(rows.toSeq.asJava, receipt.schema).coalesce(1)
+      .write.mode("overwrite").parquet(s"$outDir/_receipt")
+    Dedup.release(frame, comps)
+    rows
   }
 
   /** Ingest-time incremental path: bloom-decontaminate the stream

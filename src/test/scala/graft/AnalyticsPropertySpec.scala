@@ -134,14 +134,16 @@ class AnalyticsPropertySpec extends SparkSpec {
     (1L to 8L).foreach { seed =>
       val rows = sample(evGen, seed)
       val horizon = seed % 3 * 7L // 0, 7, 14 — includes the degenerate 0
-      val got = Dedup.dedupWithinHorizon(rows.toDF("k", "t"),
-          Seq("k"), "t", horizon)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+      // the driver-side finish and the distributed doubling loop
+      val (local, dist) = onBothPaths(
+        Dedup.dedupWithinHorizon(rows.toDF("k", "t"), Seq("k"), "t", horizon)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+          .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap)
       val want = rows.groupBy(_._1).map { case (k, kts) =>
         k -> greedy(kts.map(_._2), horizon)
       }
-      assert(got === want, s"seed $seed horizon $horizon")
+      assert(local === want, s"seed $seed horizon $horizon (local)")
+      assert(dist === want, s"seed $seed horizon $horizon (distributed)")
     }
   }
 }

@@ -24,6 +24,43 @@ class EntrySpec extends SparkSpec {
       s"README count drifted from the registered $n queries")
   }
 
+  test("evictSession empties every memo map of the session") {
+    import java.lang.reflect.ParameterizedType
+    import java.util.concurrent.ConcurrentHashMap
+    import org.apache.spark.sql.SparkSession
+    val s = spark.newSession()
+    val maps = SparkEntry.getClass.getDeclaredFields.toSeq
+      .filter(f => classOf[ConcurrentHashMap[_, _]].isAssignableFrom(f.getType))
+      .map { f =>
+        f.setAccessible(true)
+        val key = f.getGenericType.asInstanceOf[ParameterizedType]
+          .getActualTypeArguments.head
+        (f.getName, key, f.get(SparkEntry).asInstanceOf[ConcurrentHashMap[Any, Any]])
+      }
+    def keyedBy(m: ConcurrentHashMap[Any, Any]): Boolean =
+      m.keySet.stream.anyMatch {
+        case k: Product => k.productElement(0).asInstanceOf[AnyRef] eq s
+        case k => k.asInstanceOf[AnyRef] eq s
+      }
+    // one memo filled for real, then every session-keyed map by hand,
+    // so a memo added later without eviction fails here
+    SparkEntry.queries("q215_lsh_band_sweep")(s, dir).collect()
+    maps.foreach {
+      case (_, p: ParameterizedType, m)
+          if p.getActualTypeArguments.head == classOf[SparkSession] =>
+        m.putIfAbsent((s, "evict-spec"), java.lang.Boolean.TRUE)
+      case (_, k, m) if k == classOf[SparkSession] =>
+        m.putIfAbsent(s, java.lang.Boolean.TRUE)
+      case _ => ()
+    }
+    val filled = maps.filter(x => keyedBy(x._3)).map(_._1)
+    assert(filled.size >= 14, s"session-keyed maps found: $filled")
+    SparkEntry.evictSession(s)
+    maps.foreach { case (name, _, m) =>
+      assert(!keyedBy(m), s"$name still holds the evicted session")
+    }
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs and returns rows on sf0.001") {
       assert(fn(spark, dir).count() > 0, s"$name returned no rows")

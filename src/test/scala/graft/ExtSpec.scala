@@ -172,32 +172,43 @@ class ExtSpec extends SparkSpec {
   test("dedupWithinHorizon: greedy anchors, inclusive horizon, " +
       "per-key chains, doubling reaches long chains") {
     import graft.ext.Dedup
+    // every fixture runs on the driver-side finish AND the distributed
+    // doubling loop; both must give the same rows
+    def both[A](f: => A): A = {
+      val (local, dist) = onBothPaths(f)
+      assert(local === dist, "local and distributed finishes disagree")
+      local
+    }
     // key a, horizon 10: keep 0; drop 5, 10 (≤ 0+10); keep 11; drop 21
     // (≤ 11+10, the INCLUSIVE boundary); keep 40. key b independent.
     val ev = Seq(("a", 0L), ("a", 5L), ("a", 10L), ("a", 11L),
       ("a", 21L), ("a", 40L), ("b", 100L), ("b", 105L))
       .toDF("k", "t")
-    val got = Dedup.dedupWithinHorizon(ev, Seq("k"), "t", 10L)
+    val got = both(Dedup.dedupWithinHorizon(ev, Seq("k"), "t", 10L)
       .orderBy("k", "t").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq === Seq(("a", 0L), ("a", 11L), ("a", 40L),
+      .map(r => (r.getString(0), r.getLong(1))).toSeq)
+    assert(got === Seq(("a", 0L), ("a", 11L), ("a", 40L),
       ("b", 100L)))
     // duplicate (key, ts) rows contract before the chain
     val dup = Seq(("a", 0L), ("a", 0L), ("a", 30L)).toDF("k", "t")
-    assert(Dedup.dedupWithinHorizon(dup, Seq("k"), "t", 10L)
-      .count() === 2L)
+    assert(both(Dedup.dedupWithinHorizon(dup, Seq("k"), "t", 10L)
+      .count()) === 2L)
     // a 21-anchor chain needs 5 doubling rounds (2^5 > 21), not 21
     val long = (0L to 20L).map(i => ("c", i * 11L)).toDF("k", "t")
-    val lg = Dedup.dedupWithinHorizon(long, Seq("k"), "t", 10L)
-      .orderBy("t").collect().map(_.getLong(1))
-    assert(lg.toSeq === (0L to 20L).map(_ * 11L))
+    val lg = both(Dedup.dedupWithinHorizon(long, Seq("k"), "t", 10L)
+      .orderBy("t").collect().map(_.getLong(1)).toSeq)
+    assert(lg === (0L to 20L).map(_ * 11L))
     // composite key: chains are per (k1, k2)
     val comp = Seq(("a", 1L, 0L), ("a", 2L, 5L), ("a", 1L, 5L))
       .toDF("k1", "k2", "t")
-    val cg = Dedup.dedupWithinHorizon(comp, Seq("k1", "k2"), "t", 10L)
+    val cg = both(Dedup.dedupWithinHorizon(comp, Seq("k1", "k2"), "t", 10L)
       .orderBy("k2", "t").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(cg.toSeq === Seq(("a", 1L, 0L), ("a", 2L, 5L)))
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+    assert(cg === Seq(("a", 1L, 0L), ("a", 2L, 5L)))
+    // both finishes emit the same schema
+    val (ls, ds) = onBothPaths(
+      Dedup.dedupWithinHorizon(comp, Seq("k1", "k2"), "t", 10L).schema)
+    assert(ls === ds)
   }
 
   test("dedupWithinHorizon rejects dotted keys and ignores null " +
@@ -210,9 +221,47 @@ class ExtSpec extends SparkSpec {
       Dedup.dedupWithinHorizon(ev, Seq("k.x"), "t", 10L)
     }
     // the null-ts row neither anchors nor extends any chain
-    val got = Dedup.dedupWithinHorizon(ev, Seq("k"), "t", 10L)
-      .orderBy("t").collect().map(_.getLong(1))
-    assert(got.toSeq === Seq(0L, 11L))
+    val (local, dist) = onBothPaths(
+      Dedup.dedupWithinHorizon(ev, Seq("k"), "t", 10L)
+        .orderBy("t").collect().map(_.getLong(1)).toSeq)
+    assert(local === Seq(0L, 11L))
+    assert(dist === Seq(0L, 11L))
+  }
+
+  test("iterative operators: both finishes agree and release their " +
+      "checkpoints") {
+    val sc = spark.sparkContext
+    val ev = (0L to 40L).map(i => (i % 3, i * 4L)).toDF("k", "t")
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    def held[A](f: => A): (A, Int) = {
+      val before = sc.getPersistentRDDs.size
+      val out = f
+      (out, sc.getPersistentRDDs.size - before)
+    }
+    // the local finish returns a driver-built frame: nothing stays
+    // pinned; the distributed loops keep only the returned frame's
+    // checkpoint
+    val (hl, hd) = onBothPaths(held(
+      Dedup.dedupWithinHorizon(ev, Seq("k"), "t", 10L).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq))
+    assert(hl._1 === hd._1)
+    assert(hl._2 <= 0 && hd._2 <= 1, s"horizon dedup held ${hl._2}/${hd._2}")
+    val (cl, cd) = onBothPaths(held(
+      Dedup.components(chain).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+    assert(cl._1 === cd._1 && cl._1.values.toSet === Set(1L))
+    assert(cl._2 <= 0 && cd._2 <= 1, s"components held ${cl._2}/${cd._2}")
+    // both finishes emit the same schema
+    val (sl, sd) = onBothPaths(Dedup.components(chain).schema)
+    assert(sl === sd)
+    // string ids label by Spark's UTF-8 byte order, which puts U+FF21
+    // before U+1F600 where UTF-16 order puts it after
+    val names = Seq(("\uD83D\uDE00", "\uFF21"), ("x", "y"))
+      .toDF("doc_a", "doc_b")
+    val (nl, nd) = onBothPaths(Dedup.components(names).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap)
+    assert(nl === nd)
+    assert(nl("\uD83D\uDE00") === "\uFF21" && nl("\uFF21") === "\uFF21")
+    assert(nl("y") === "x")
   }
 
   test("blocked containment recalls the exact pairs on the fixture corpus") {
@@ -951,8 +1000,12 @@ class ExtSpec extends SparkSpec {
 
   test("componentsWithRounds: double jump collapses a 200-chain fast") {
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labelled, rounds) = Dedup.componentsWithRounds(chain)
-    val comps = labelled.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // pinned to the distributed loop (the local finish runs no rounds)
+    val (labelled, rounds) = distributed {
+      val (df, n) = Dedup.componentsWithRounds(chain)
+      (df.collect(), n)
+    }
+    val comps = labelled.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps.size === 200 && comps.values.toSet === Set(1L))
     // label-travel distance grows d → 3(d+1) per round (neighbor-min
     // +1, then +d per jump through the stepped map): 1, 6, 21, 66, 201
@@ -1910,6 +1963,49 @@ class ExtSpec extends SparkSpec {
     assert(recalls.last === 1000000L)
     val raw = got.map(_.getAs[Long]("n_raw_candidates"))
     assert(raw.sameElements(raw.sorted))
+  }
+
+  test("lshBandSweep equals a plain-Scala recount over its signatures " +
+      "and exact pairs, with and without a bucket cap") {
+    val corpus = spark.read.parquet(sf("documents"))
+    val (k, bandsList, threshold) = (64, Seq(4, 8, 16), 0.5)
+    val sigs = Dedup.minhashSignatures(corpus, k, scheme = Dedup.OracleHash)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
+    val exact = Dedup.jaccardPairs(corpus, threshold, maxPostings = 1000)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // a band bucket is (band, band slice): equal slices collide (the
+    // band hash only stands in for the slice)
+    def recount(cap: Int): Seq[Seq[Option[Long]]] = bandsList.map { bands =>
+      val r = k / bands
+      val cand = (0 until bands).flatMap { b =>
+        sigs.toSeq.groupBy(_._2.slice(b * r, b * r + r)).values
+          .filter(_.size <= cap).flatMap { bucket =>
+            val ids = bucket.map(_._1).sorted
+            for (i <- ids; j <- ids if i < j) yield (i, j)
+          }
+      }.toSet
+      val verified = cand.filter { case (a, b) =>
+        val same = sigs(a).zip(sigs(b)).count { case (x, y) => x == y }
+        math.floor(same.toDouble / k * 10000) / 10000 >= threshold
+      }
+      val common = (exact & verified).size.toLong
+      def micro(d: Long) = Option.when(d > 0)(common * 1000000L / d)
+      Seq(bands.toLong, exact.size.toLong, cand.size.toLong,
+        verified.size.toLong, common).map(n => Option(n)) ++
+        Seq(micro(exact.size.toLong), micro(verified.size.toLong))
+    }
+    for (cap <- Seq(Int.MaxValue, 2)) {
+      val got = Dedup.lshBandSweep(corpus, threshold, k, bandsList,
+          maxPostings = 1000, maxBucketSize = cap, scheme = Dedup.OracleHash)
+        .collect().map(r => (0 until 7).map(i =>
+          Option.unless(r.isNullAt(i))(r.getLong(i))))
+        .toSeq
+      val want = recount(cap)
+      assert(got === want, s"maxBucketSize=$cap")
+      assert(want.exists(_(2).exists(_ > 0)),
+        "the corpus must produce candidates")
+    }
+    assert(recount(2) != recount(Int.MaxValue), "the cap must bite")
   }
 
   test("shardedTopK equals the unsharded brute scan (exactness theorem)") {

@@ -94,4 +94,29 @@ class ParSpec extends AnyFunSuite {
       assert(cleared === None)
     } finally sc.setLocalProperty("spark.job.description", null)
   }
+
+  test("a branch submitted with no active session does not keep a " +
+      "reused pool thread's stale description") {
+    import org.apache.spark.sql.SparkSession
+    val spark = SparkSpec.session
+    val sc = spark.sparkContext
+    sc.setLocalProperty("spark.job.description", "par-spec-stale")
+    try {
+      // the labelled branch leaves its description on a pool thread
+      val (seen, _) = Par.sections(
+        sc.getLocalProperty("spark.job.description"), ())
+      assert(seen === "par-spec-stale")
+      sc.setLocalProperty("spark.job.description", null)
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      Thread.sleep(100) // let the pool thread go idle, so it is reused
+      val (later, _) = Par.sections(
+        Option(sc.getLocalProperty("spark.job.description")), ())
+      assert(later === None)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+      sc.setLocalProperty("spark.job.description", null)
+    }
+  }
 }

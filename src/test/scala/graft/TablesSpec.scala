@@ -78,6 +78,34 @@ class TablesSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.spread.floor")
   }
 
+  test("spread confs are validated: target bytes > 0, floor >= 1, " +
+      "the error names the key") {
+    val dir = fixture(
+      StructField("ts", TimestampType, false),
+      Seq(Row(1L, new Timestamp(epochMicros / 1000L))))
+    for ((key, bad) <- Seq(
+        "spark.graft.spread.targetPartitionBytes" -> "0",
+        "spark.graft.spread.targetPartitionBytes" -> "-5",
+        "spark.graft.spread.floor" -> "0",
+        "spark.graft.spread.floor" -> "-1",
+        "spark.graft.spread.floor" -> "eight")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Tables.table(spark, dir, "events"))
+        assert(e.getMessage.contains(key), s"$key=$bad")
+      } finally spark.conf.unset(key)
+    }
+    // the smallest valid values load
+    spark.conf.set("spark.graft.spread.targetPartitionBytes", "1")
+    spark.conf.set("spark.graft.spread.floor", "1")
+    try assert(Tables.table(spark, dir, "events").count() === 1L)
+    finally {
+      spark.conf.unset("spark.graft.spread.targetPartitionBytes")
+      spark.conf.unset("spark.graft.spread.floor")
+    }
+  }
+
   test("events: an unexpected ts type fails loudly, naming the type") {
     val dir = fixture(
       StructField("ts", StringType, false),

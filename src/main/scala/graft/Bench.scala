@@ -48,7 +48,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // run-context snapshot BEFORE any Spark work: full-suite totals
     // swing 105-135 s with machine state (page cache, post-test-suite
     // GC carryover — see NOTES), so cross-round ratios are only
@@ -107,37 +107,7 @@ object Bench {
     // about ride in the record itself, not only in NOTES.md
     val annotations =
       """"annotations":{"q135_incremental_components":"r07+: prior-batch labelling is memoized into warmup (warmShared); r06-and-earlier timings include that rebuild (~60% of the r06 number) - not like-for-like across the r06/r07 boundary","q144_lsh_eval":"r08+: eval corpus is a deterministic md5-keep half-sample (oracle replays it); r07 timings ran the full doc set - not like-for-like across the r07/r08 boundary","q220_vector_ingest_parity":"times a full in-query MemoryStream stream-vs-batch LIFECYCLE (setup+teardown), not a query plan - the suite's largest round-to-round variance source; compare rounds on direction only","q226_residual_ingest_parity":"same harness-cost caveat as q220: MemoryStream lifecycle dominates the number, not the residual-PQ plan"}"""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (udaf paths: capped_collect, mg_summary,
-      // vector_mean) falls back to SORT-BASED aggregation past 128
-      // distinct keys per task — a full per-task sort for aggregates
-      // whose buffers here are tiny (<=64 doubles / <=capacity map
-      // entries). 4096 keys x ~2 KB stays well inside task memory and
-      // keeps the hash path for the 980-cluster kmeans and 2048-bucket
-      // postings aggregates.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // guide §3.1/§9: let the planner pick shuffled-hash join when its
-      // size conditions fit (build side per-partition small) instead of
-      // always sort-merge — skips both sorts on keyed equi-joins whose
-      // build side is bounded (dims, contractions, shortlists). r17
-      // probe: 18/20 queries faster, none slower >0.02 s. Results are
-      // strategy-independent; explicit merge/shuffle_hash hints in
-      // operators still override per site.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // scale-run allowance: at 30× the dup-dense component chain's
-      // AQE-planned broadcast builds exceed the 1g default and killed
-      // warmShared (driver merges broadcast task results in local
-      // mode); harmless at sf0.1
-      .config("spark.driver.maxResultSize",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT_SIZE", "8g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", cpus)
 
     Bench.warmTables(spark, sfDir)
 

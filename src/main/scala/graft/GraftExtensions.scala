@@ -10,7 +10,7 @@ import graft.functions.{CharShingles, DotProduct, GramStats, WordGrams, WordShin
   * expressions as SQL functions, so `spark.sql("SELECT dot_product(a,b)")`
   * works next to the Column API. Activate with either
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   builder.withExtensions(new GraftExtensions) ...
   *   // or
   *   --conf spark.sql.extensions=graft.GraftExtensions
   *

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Curation, Dedup, Similarity, TextAnalysis}
@@ -19,24 +18,7 @@ object ScaleProbe {
     val docReps = args.lift(1).map(_.toInt).getOrElse(200)
     val eventReps = args.lift(2).map(_.toInt).getOrElse(100)
     val only = args.lift(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (udaf paths: capped_collect, mg_summary,
-      // vector_mean) falls back to SORT-BASED aggregation past 128
-      // distinct keys per task — a full per-task sort for aggregates
-      // whose buffers here are tiny (<=64 doubles / <=capacity map
-      // entries). 4096 keys x ~2 KB stays well inside task memory and
-      // keeps the hash path for the 980-cluster kmeans and 2048-bucket
-      // postings aggregates.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-probe")
 
     def timed(name: String)(f: => Long): Unit =
       if (only.forall(_.split(",").exists(name.contains))) {

@@ -135,27 +135,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (udaf paths: capped_collect, mg_summary,
-      // vector_mean) falls back to SORT-BASED aggregation past 128
-      // distinct keys per task — a full per-task sort for aggregates
-      // whose buffers here are tiny (<=64 doubles / <=capacity map
-      // entries). 4096 keys x ~2 KB stays well inside task memory and
-      // keeps the hash path for the 980-cluster kmeans and 2048-bucket
-      // postings aggregates.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirrors Bench (guide §3.1): shuffled-hash join allowed when its
-      // size conditions fit — results are strategy-independent, and the
-      // correctness dump should run the same plans the bench times
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify")
     // dev aid (mirrors Bench): SPARK_GRAFT_ONLY=q54_tfidf,q55_lm_score
     // restricts the dump + oracle json; the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -2242,8 +2242,8 @@ object Similarity {
     * round-robin across the `m` subspaces, so the corpus's dominant
     * direction spreads over every codebook instead of concentrating
     * its variance in one or two: each codebook then quantizes an
-    * equal share of the signal. Measured on this corpus (OpqProbe,
-    * sf0.01, 16×32 budget): plain contiguous slicing recall@5 0.42,
+    * equal share of the signal. Measured on this corpus (sf0.01,
+    * 16×32 budget): plain contiguous slicing recall@5 0.42,
     * variance-balanced 0.46, PC1-guided 0.50 — while two RANDOM
     * signed permutations measured 0.32/0.36, i.e. the gain is the
     * data-derived allocation, not mixing per se.

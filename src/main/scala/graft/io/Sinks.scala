@@ -22,10 +22,9 @@ object Sinks {
     * relies on. */
   def partitionedParquet(df: DataFrame, out: String,
                          partitionCol: String = "order_date"): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.repartition(col(partitionCol))
       .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(out)
   }

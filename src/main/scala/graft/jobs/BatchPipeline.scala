@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.io.{Sinks, Sources}
 import graft.ops.{Aggregations, Cleansing}
 
@@ -42,11 +43,7 @@ object BatchPipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(inputDir, parquetOut, csvOutDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .appName("graft-batch-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .getOrCreate()
+    val spark = GraftSession.submitted("graft-batch-pipeline")
     try {
       val ok = run(spark, inputDir, parquetOut, csvOutDir)
       if (!ok) sys.exit(1)

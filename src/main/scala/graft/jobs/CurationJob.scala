@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.GraftSession
 import graft.ext.{Curation, Dedup, TextAnalysis}
 import graft.stream.{ElectionStream, StreamDecontam}
 
@@ -127,10 +128,7 @@ object CurationJob {
     val Array(docsDir, outDir) = args.take(2)
     val benchModulus =
       if (args.length > 2) args(2).toInt else 31
-    val spark = SparkSession.builder()
-      .appName("graft-curation-job")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.submitted("graft-curation-job")
     try {
       val receipt = run(spark, docsDir, outDir, benchModulus)
       receipt.foreach(r => println(s"[curation] $r"))

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.stream.StreamingRevenue
 
 /** The reference's streaming job
@@ -52,11 +53,10 @@ object StreamingJob {
     val trigger = env.getOrElse("STREAM_TRIGGER_INTERVAL", "30 seconds")
     val shuffle = env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "4")
 
-    val spark = SparkSession.builder()
-      .appName("graft-streaming-revenue")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // a stateful stream's shuffle-partition count is fixed by its
+    // checkpoint, so it stays the deployment's setting
+    val spark = GraftSession.submitted("graft-streaming-revenue",
+      "spark.sql.shuffle.partitions" -> shuffle)
     val agg = StreamingRevenue.pipeline(source(spark, env.toMap))
     val query = StreamingRevenue.sink(agg, outPath, ckpt, trigger).start()
     query.awaitTermination()

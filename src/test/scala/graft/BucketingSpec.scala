@@ -54,6 +54,19 @@ class BucketingSpec extends SparkSpec {
     assert(read.collect().map(_.getAs[String]("product")).toSeq === Seq("B"))
   }
 
+  test("date-partitioned sink replaces only the partitions it writes, even in a static-overwrite session") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    val out = java.nio.file.Files.createTempDirectory("part_over").toString + "/daily"
+    def day(d: String, product: String) = s.createDataFrame(Seq((d, product, 1.0)))
+      .toDF("order_date", "product", "amount")
+      .withColumn("order_date", to_date(col("order_date")))
+    Sinks.partitionedParquet(day("2025-01-15", "A").union(day("2025-01-16", "B")), out)
+    Sinks.partitionedParquet(day("2025-01-16", "C"), out)
+    assert(s.read.parquet(out).orderBy("order_date").collect()
+      .map(_.getAs[String]("product")).toSeq === Seq("A", "C"))
+  }
+
   test("survivors drops the larger id of each near-dup pair") {
     val docs = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "a"))
       .toDF("doc_id", "text")

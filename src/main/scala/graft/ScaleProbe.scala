@@ -797,8 +797,9 @@ object ScaleProbe {
     }
 
     // ===== round-12 additions ==========================================
-    // residual-PQ lifecycle at 30x: persist + reload + search, then a
-    // frozen delta add + search (the q201/q202 deployment shapes)
+    // IVF (residual-PQ) index lifecycle at 30x: the flat index's
+    // save/load + search, frozen add + search and drift on an index
+    // with a coarse quantizer (the q201/q202/q204 deployment shapes)
     val resLifecycleNames = Seq(
       s"res_lifecycle save+load+search x$docReps",
       s"res_lifecycle add+search x$docReps",
@@ -814,21 +815,19 @@ object ScaleProbe {
         .createTempDirectory("graft_respq30").toString
       try {
         timed(s"res_lifecycle save+load+search x$docReps") {
-          Similarity.saveResidualPqIndex(ridx, rdir)
+          Similarity.savePqIndex(ridx, rdir)
           consume(Similarity.residualPqSearch(
-            Similarity.loadResidualPqIndex(spark, rdir), q, k = 5,
-            nProbe = 4))
+            Similarity.loadPqIndex(spark, rdir), q, k = 5, nProbe = 4))
         }
         timed(s"res_lifecycle add+search x$docReps") {
           consume(Similarity.residualPqSearch(
-            Similarity.residualPqIndexAdd(ridx, delta), q, k = 5,
-            nProbe = 4))
+            Similarity.pqIndexAdd(ridx, delta), q, k = 5, nProbe = 4))
         }
         // the q204 measure step over the grown index (one corpus pass
         // + the skinny codes join + broadcast recenter/codebooks)
         timed(s"res_lifecycle drift x$docReps") {
-          consume(Similarity.residualPqDriftStats(
-            Similarity.residualPqIndexAdd(ridx, delta), emb,
+          consume(Similarity.pqDriftStats(
+            Similarity.pqIndexAdd(ridx, delta), emb,
             when(pmod(col("vec_id"), lit(5)) === 0, lit("delta"))
               .otherwise(lit("base"))))
         }
@@ -943,15 +942,15 @@ object ScaleProbe {
     timed(s"ivf_cell_stats x$docReps") {
       consume(Similarity.ivfCellStats(emb, nCentroids = 16))
     }
-    // residual refine at 30x (q218): residual first stage off a
-    // prebuilt index + the |Q|·20-row exact join (the q209 shape on
-    // the residual path)
+    // residual refine at 30x (q218): refineUpliftStats over a prebuilt
+    // IVF index (a residualPqSearch first stage) + the |Q|·20-row
+    // exact join (the q209 shape on the residual path)
     if (only.forall(_.split(",")
         .exists(t => s"residual_refine x$docReps".contains(t)))) {
       val rIdx = Similarity.residualPqBuild(emb, nCentroids = 16,
         m = 16, dsub = 4, kCodes = 32)
       timed(s"residual_refine x$docReps") {
-        consume(Similarity.residualRefineUpliftStats(rIdx, emb,
+        consume(Similarity.refineUpliftStats(rIdx, emb,
           emb.filter(col("vec_id") < 10), k = 5, r = 20, nProbe = 4))
       }
     }

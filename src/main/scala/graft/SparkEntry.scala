@@ -188,7 +188,7 @@ object SparkEntry {
     Seq[java.util.concurrent.ConcurrentHashMap[(SparkSession, String), _]](
       componentsMemo, dupPairsMemo, nearDupSweepMemo, qualitySweepMemo,
       lshSweepMemo, bpeEncodedMemo, oldLabelsMemo, pqIndexMemo,
-      residualPqIndexMemo, grownPqIndexMemo, grownResidualPqIndexMemo,
+      ivfPqIndexMemo, grownPqIndexMemo, grownIvfPqIndexMemo,
       quantLadderMemo, assetSigsMemo)
       .foreach(_.keySet.removeIf(k => k._1 eq s))
     evictionHooked.remove(s)
@@ -245,24 +245,24 @@ object SparkEntry {
         Multimodal.withReencodedVariants(documents(s, d)))))
   }
 
-  private def sharedPqIndex(s: SparkSession, d: String): Similarity.PqIndex = {
+  private[graft] def sharedPqIndex(s: SparkSession, d: String): Similarity.PqIndex = {
     hookEviction(s)
     pqIndexMemo.computeIfAbsent((s, d), _ =>
       Similarity.pqBuild(embeddings(s, d), m = 16, dsub = 4,
         kCodes = 32, iters = 1))
   }
 
-  /** One residual-encoded index per (session, dir) — q189/q190 share
-    * it exactly as q177/q178/q185/q186 share [[sharedPqIndex]]; SAME
-    * coarse geometry (16 cells) and code budget (16 × 32) as the
-    * shared raw-vector index so q190's uplift comparison is
+  /** One IVF (residual-encoded) index per (session, dir) —
+    * q189/q190 share it exactly as q177/q178/q185/q186 share
+    * [[sharedPqIndex]]; SAME coarse geometry (16 cells) and code budget
+    * (16 × 32) as the shared flat index so q190's uplift comparison is
     * equal-budget by construction. */
-  private val residualPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.ResidualPqIndex]()
-  private def sharedResidualPqIndex(s: SparkSession,
-                                    d: String): Similarity.ResidualPqIndex = {
+  private val ivfPqIndexMemo =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
+  private[graft] def sharedIvfPqIndex(s: SparkSession,
+                                      d: String): Similarity.PqIndex = {
     hookEviction(s)
-    residualPqIndexMemo.computeIfAbsent((s, d), _ =>
+    ivfPqIndexMemo.computeIfAbsent((s, d), _ =>
       Similarity.residualPqBuild(embeddings(s, d), nCentroids = 16,
         m = 16, dsub = 4, kCodes = 32, iters = 1))
   }
@@ -272,37 +272,37 @@ object SparkEntry {
     * built once per (session, dir), like the other index memos. */
   private val grownPqIndexMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private def sharedGrownPqIndex(s: SparkSession,
-                                 d: String): Similarity.PqIndex = {
+  private[graft] def sharedGrownPqIndex(s: SparkSession,
+                                        d: String): Similarity.PqIndex = {
     hookEviction(s)
-    grownPqIndexMemo.computeIfAbsent((s, d), _ => {
-      val emb = embeddings(s, d)
-      Similarity.pqIndexAdd(
-        Similarity.pqBuild(emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-          m = 16, dsub = 4, kCodes = 32, iters = 1),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0))
-    })
+    grownPqIndexMemo.computeIfAbsent((s, d), _ => grownIndex(s, d)(
+      Similarity.pqBuild(_, m = 16, dsub = 4, kCodes = 32, iters = 1)))
   }
 
-  /** The q202 GROWN residual index — the q198 shape on the residual
+  /** An index `build` trains on the 80% base (vec_id % 5 ≠ 0), grown
+    * by the 20% delta with frozen quantizers. */
+  private def grownIndex(s: SparkSession, d: String)
+                        (build: DataFrame => Similarity.PqIndex)
+      : Similarity.PqIndex = {
+    val emb = embeddings(s, d)
+    Similarity.pqIndexAdd(build(emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)),
+      emb.filter(pmod(col("vec_id"), lit(5)) === 0))
+  }
+
+  /** The q202 GROWN IVF index — the q198 shape on the residual
     * lifecycle: coarse seeds, cell means and residual codebooks all
     * train on the 80% base (vec_id % 5 ≠ 0); the 20% delta
     * coarse-assigns to the frozen seeds, recentres on the frozen
     * means and encodes against the frozen codebooks. Built once per
     * (session, dir), like the other index memos. */
-  private val grownResidualPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.ResidualPqIndex]()
-  private def sharedGrownResidualPqIndex(s: SparkSession,
-                                         d: String): Similarity.ResidualPqIndex = {
+  private val grownIvfPqIndexMemo =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
+  private[graft] def sharedGrownIvfPqIndex(s: SparkSession,
+                                           d: String): Similarity.PqIndex = {
     hookEviction(s)
-    grownResidualPqIndexMemo.computeIfAbsent((s, d), _ => {
-      val emb = embeddings(s, d)
-      Similarity.residualPqIndexAdd(
-        Similarity.residualPqBuild(
-          emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-          nCentroids = 16, m = 16, dsub = 4, kCodes = 32, iters = 1),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0))
-    })
+    grownIvfPqIndexMemo.computeIfAbsent((s, d), _ => grownIndex(s, d)(
+      Similarity.residualPqBuild(_, nCentroids = 16, m = 16, dsub = 4,
+        kCodes = 32, iters = 1)))
   }
 
   /** The MEASURED quantization ladder shared by q225 (the tuning
@@ -337,9 +337,9 @@ object SparkEntry {
     sharedComponents(s, d)
     q135OldLabels(s, d)
     sharedPqIndex(s, d)
-    sharedResidualPqIndex(s, d)
+    sharedIvfPqIndex(s, d)
     sharedGrownPqIndex(s, d)
-    sharedGrownResidualPqIndex(s, d)
+    sharedGrownIvfPqIndex(s, d)
     sharedAssetSigs(s, d)
     ()
   }
@@ -2287,7 +2287,7 @@ object SparkEntry {
     // coarse geometry and 16×32 code budget as the shared raw index
     "q189_residual_ivfpq" -> ((s, d) => {
       val emb = embeddings(s, d)
-      Similarity.residualPqSearch(sharedResidualPqIndex(s, d),
+      Similarity.residualPqSearch(sharedIvfPqIndex(s, d),
         emb.filter(col("vec_id") < 10), k = 5, nProbe = 4)
     }),
 
@@ -2297,7 +2297,7 @@ object SparkEntry {
     // drift in either ranking or the uplift flag reds the row
     "q190_residual_uplift" -> ((s, d) => {
       val emb = embeddings(s, d)
-      Similarity.residualUpliftStats(sharedResidualPqIndex(s, d),
+      Similarity.residualUpliftStats(sharedIvfPqIndex(s, d),
         sharedPqIndex(s, d), emb, emb.filter(col("vec_id") < 10),
         k = 5, nCentroids = 16, nProbe = 4)
     }),
@@ -2463,8 +2463,8 @@ object SparkEntry {
       val out = s"${sys.props("java.io.tmpdir")}/graft_respq_idx_" +
         Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
       hookTmpDelete(out)
-      Similarity.saveResidualPqIndex(sharedResidualPqIndex(s, d), out)
-      Similarity.residualPqSearch(Similarity.loadResidualPqIndex(s, out),
+      Similarity.savePqIndex(sharedIvfPqIndex(s, d), out)
+      Similarity.residualPqSearch(Similarity.loadPqIndex(s, out),
         embeddings(s, d).filter(col("vec_id") < 10), k = 5, nProbe = 4)
     }),
 
@@ -2476,7 +2476,7 @@ object SparkEntry {
     // over the combined codes. The oracle replays base-training +
     // frozen delta encode end to end
     "q202_residual_index_add" -> ((s, d) => {
-      Similarity.residualPqSearch(sharedGrownResidualPqIndex(s, d),
+      Similarity.residualPqSearch(sharedGrownIvfPqIndex(s, d),
         embeddings(s, d).filter(col("vec_id") < 10), k = 5, nProbe = 4)
     }),
 
@@ -2512,7 +2512,7 @@ object SparkEntry {
     // reds the row
     "q204_residual_drift" -> ((s, d) => {
       val emb = embeddings(s, d)
-      Similarity.residualPqDriftStats(sharedGrownResidualPqIndex(s, d),
+      Similarity.pqDriftStats(sharedGrownIvfPqIndex(s, d),
         emb,
         when(pmod(col("vec_id"), lit(5)) === 0, lit("delta"))
           .otherwise(lit("base")))
@@ -2656,7 +2656,7 @@ object SparkEntry {
     // refined ≥ unrefined stays a theorem, the row shape is q210's
     "q218_residual_refine_uplift" -> ((s, d) => {
       val emb = embeddings(s, d)
-      Similarity.residualRefineUpliftStats(sharedResidualPqIndex(s, d),
+      Similarity.refineUpliftStats(sharedIvfPqIndex(s, d),
         emb, emb.filter(col("vec_id") < 10), k = 5, r = 20, nProbe = 4)
     }),
 
@@ -2668,7 +2668,7 @@ object SparkEntry {
     // wants a re-seed even when per-code error looks fine)
     "q219_ivf_cell_drift" -> ((s, d) =>
       Similarity.ivfCellDriftStats(
-        sharedGrownResidualPqIndex(s, d).cells,
+        sharedGrownIvfPqIndex(s, d).ivf.get.cells,
         pmod(col("id"), lit(5)) === 0, cellCol = "centroid_id")),
 
     // ===== Matryoshka prefix-dimension two-stage search ===============
@@ -2729,7 +2729,8 @@ object SparkEntry {
     // ON-DISK artifact is searched; the oracle is q198's frozen-add
     // replay VERBATIM, so any stream-path divergence reds the row
     "q220_vector_ingest_parity" -> ((s, d) =>
-      graft.stream.VectorIngest.ingestParityProbe(s, embeddings(s, d))),
+      graft.stream.VectorIngest.ingestParityProbe(s, embeddings(s, d),
+        Similarity.pqBuild(_, m = 16, dsub = 4, kCodes = 32, iters = 1))),
 
     // ===== streaming RESIDUAL vector ingest, stream↔batch parity ======
     // the q220 contract on the residual lifecycle: the 20% delta
@@ -2738,8 +2739,9 @@ object SparkEntry {
     // re-sent id), then the grown on-disk artifact is searched with
     // q202's geometry; the oracle is q202's frozen-add replay VERBATIM
     "q226_residual_ingest_parity" -> ((s, d) =>
-      graft.stream.ResidualVectorIngest.ingestParityProbe(
-        s, embeddings(s, d))),
+      graft.stream.VectorIngest.ingestParityProbe(s, embeddings(s, d),
+        Similarity.residualPqBuild(_, nCentroids = 16, m = 16, dsub = 4,
+          kCodes = 32, iters = 1))),
 
     // ===== binary-quantization Hamming top-k ==========================
     // the 32× rung of the quantization ladder: per-dim corpus

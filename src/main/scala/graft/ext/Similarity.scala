@@ -552,7 +552,7 @@ object Similarity {
   }
 
   /** Per-query probe selection shared by [[ivfTopK]] and
-    * [[ivfPqTopK]] — rank the nCentroids smallest-id seed centroids
+    * [[ivfPqSearch]] — rank the nCentroids smallest-id seed centroids
     * per query by 6-dp-rounded cosine (the ivfAssign reproducibility
     * convention: probe choice must replay bit-for-bit in the
     * cross-engine oracle; ties on c_id) and keep nProbe. ONE shared
@@ -561,11 +561,16 @@ object Similarity {
   private def ivfProbes(corpus: DataFrame, queries: DataFrame,
                         nCentroids: Int, nProbe: Int,
                         idCol: String, vecCol: String): DataFrame =
-    ivfProbesFrom(
-      corpus.select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
-        .withColumn("cn", norm(col("cv")))
-        .orderBy(col("c_id")).limit(nCentroids),
+    ivfProbesFrom(seedCentroids(corpus, nCentroids, idCol, vecCol),
       queries, nProbe, idCol, vecCol)
+
+  /** The `nCentroids` smallest-id vectors as coarse seed centroids
+    * (c_id, cv, cn). */
+  private def seedCentroids(corpus: DataFrame, nCentroids: Int,
+                            idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
+      .withColumn("cn", norm(col("cv")))
+      .orderBy(col("c_id")).limit(nCentroids)
 
   /** [[ivfProbes]] over a PREPARED centroid frame (c_id, cv, cn) —
     * the form a self-contained index artifact uses: the coarse seeds
@@ -1090,16 +1095,17 @@ object Similarity {
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
     val vecs = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val (subs, cents) = pqCore(vecs, m, dsub, k, iters)
-    pqAssignCore(subs, cents)
-      .select(col("id").as(idCol), col("sub"), col("best.c_id").as("code"))
+    pqCore(vecs, m, dsub, k, iters)._1
+      .select(col("id").as(idCol), col("sub"), col("code"))
   }
 
   /** PQ training core over a prepared (id, v: array<double>) frame:
-    * returns the checkpointed subvector frame and the final codebooks
-    * (sub, c_id, cv). Shared by [[pqEncode]] and [[pqAdcTopK]] so the
-    * trajectory (seeds, 6-dp argmin/means, empty-code carry) stays
-    * byte-identical between the code dump and the search path.
+    * returns the LAZY codes (id, sub, code) — the final assignment
+    * pass over the checkpointed subvector frame — and the final
+    * codebooks (sub, c_id, cv). Shared by [[pqEncode]] and the index
+    * builders so the trajectory (seeds, 6-dp argmin/means, empty-code
+    * carry) stays byte-identical between the code dump and the search
+    * path.
     * `seedOffset` skips that many smallest-id rows before taking the
     * `k` seed vectors — [[residualPqBuild]] sets it to nCentroids so
     * seeds are never the (~zero) residuals of the coarse centroids
@@ -1111,9 +1117,7 @@ object Similarity {
       "m, dsub, k must be positive and iters non-negative")
     require(seedOffset >= 0, "seedOffset must be non-negative")
     val subs = vecs
-      .select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
+      .select(col("id"), subvectors(col("v"), m, dsub))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     val seeds = vecs.select(col("id")).orderBy(col("id"))
       .offset(seedOffset).limit(k)
@@ -1132,24 +1136,46 @@ object Similarity {
           coalesce(col("mv"), col("cv")).as("cv"))
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
-    (subs, cents)
+    (pqAssignCore(subs, cents)
+      .select(col("id"), col("sub"), col("best.c_id").as("code")), cents)
   }
 
   /** Nearest-code assignment per (id, sub): 6-dp-rounded L2 argmin,
-    * ties to the smallest code, collapsed map-side via min_by. */
+    * ties to the smallest code, collapsed map-side via min_by. Columns
+    * of `subs` other than (sub, sv) ride along as grouping keys; they
+    * must be functionally dependent on `id` (an IVF delta's
+    * `centroid_id`), so the groups are the (id, sub) ones. */
   private def pqAssignCore(subs: DataFrame, cents: DataFrame): DataFrame = {
     val dist2 = round(
       dot(col("sv"), col("sv")) - lit(2) * dot(col("sv"), col("cv")) +
         dot(col("cv"), col("cv")), 6)
+    val keys = subs.columns.filterNot(Set("sub", "sv")) :+ "sub"
     subs.join(broadcast(cents), "sub")
       .withColumn("_d", dist2)
-      .groupBy(col("id"), col("sub"))
+      .groupBy(keys.map(col).toIndexedSeq: _*)
       .agg(min_by(struct(col("c_id"), col("sv")),
         struct(col("_d"), col("c_id"))).as("best"))
   }
 
+  /** `v` cut into `m` consecutive `dsub`-dim subvectors, exploded to
+    * one (sub, sv) row per subspace. */
+  private def subvectors(v: Column, m: Int, dsub: Int): Column =
+    posexplode(transform(sequence(lit(0), lit(m - 1)),
+      s => slice(v, s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv"))
+
+  /** A double pinned to an exact BIGINT micro, `floor(x·1e6 + 0.5)`. */
+  private def micro(x: Column): Column = floor(x * 1e6 + lit(0.5)).cast("long")
+
+  /** Squared L2 distance of two arrays in exact integer micro²: every
+    * element pinned by [[micro]] before any arithmetic, so the sum is
+    * order-free and bit-identical across engines. */
+  private def microDist2(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => (micro(x) - micro(y)) * (micro(x) - micro(y))),
+      lit(0L), (acc, x) => acc + x)
+
   /** Per-(query, subspace, codeword) ADC lookup table shared by
-    * [[pqAdcTopK]] and [[ivfPqTopK]]: exact integer micro² squared
+    * [[pqAdcSearch]] and [[ivfPqSearch]]: exact integer micro² squared
     * distances — every element pinned to a BIGINT micro via
     * `floor(x·1e6 + 0.5)` BEFORE any arithmetic (bit-identical across
     * engines; a 6-dp `round` here flipped boundary values downstream
@@ -1163,28 +1189,96 @@ object Similarity {
                     idCol: String, vecCol: String): DataFrame = {
     val qsubs = queries
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("v"))
-      .select(col("qid"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
-    def micro(x: Column) = floor(x * 1e6 + lit(0.5)).cast("long")
+      .select(col("qid"), subvectors(col("v"), m, dsub))
     qsubs.join(broadcast(cents), "sub")
       .select(col("qid"), col("sub"), col("c_id"),
-        aggregate(
-          zip_with(col("sv"), col("cv"),
-            (a, b) => (micro(a) - micro(b)) * (micro(a) - micro(b))),
-          lit(0L), (acc, x) => acc + x).as("dm"))
+        microDist2(col("sv"), col("cv")).as("dm"))
   }
 
   /** A trained PQ index: the encoded corpus `codes` (id, sub, code),
     * eagerly checkpointed, plus the codebooks `cents` (sub, c_id, cv)
-    * and the training geometry (`m` subspaces of `dsub` dims). Built
-    * once by [[pqBuild]], then served to any number of query batches
-    * by [[pqAdcSearch]] / [[ivfPqSearch]] — the FAISS train→add→search
-    * lifecycle. At 100 TB the build (3 assignment passes over the
-    * corpus) amortizes across every batch that searches it; the repo's
-    * q177/q178/q185/q186 share one build the same way. */
+    * and the training geometry (`m` subspaces of `dsub` dims) — the
+    * FAISS train→add→search lifecycle. At 100 TB the build (3
+    * assignment passes over the corpus) amortizes across every batch
+    * that searches it; the repo's q177/q178/q185/q186 share one build
+    * the same way.
+    *
+    * One type serves both index kinds (Jégou et al. TPAMI 2011: IVFPQ
+    * is PQ with a coarse quantizer in front):
+    *  - flat (`ivf` = None): codes quantize the raw vectors. Built by
+    *    [[pqBuild]], searched by [[pqAdcSearch]] (flat ADC scan) or
+    *    [[ivfPqSearch]] (cells re-derived from a corpus).
+    *  - IVF (`ivf` = Some): codes quantize RESIDUALS v − μ(cell)
+    *    against a coarse quantizer ([[PqIvf]]). Built by
+    *    [[residualPqBuild]], searched by [[residualPqSearch]].
+    * Save/load, the frozen add, drift and refine uplift take either
+    * kind; the IVF branch differs only by recentring each vector on
+    * its cell's frozen mean before the subvector cut. */
   final case class PqIndex(m: Int, dsub: Int,
-                           codes: DataFrame, cents: DataFrame)
+                           codes: DataFrame, cents: DataFrame,
+                           ivf: Option[PqIvf] = None) {
+    /** The indexed ids, one row each: the stored cell assignment of an
+      * IVF index, else the codes' sub = 0 slice. */
+    private[graft] def ids: DataFrame =
+      ivf.fold(codes.filter(col("sub") === 0))(_.cells).select(col("id"))
+
+    /** This index plus `fresh` rows in the [[pqEncodeFresh]] shape, as
+      * lazy unions: their codes, and an IVF index's cell assignments
+      * (the sub = 0 slice). */
+    private[graft] def grown(fresh: DataFrame): PqIndex = copy(
+      codes = codes.unionAll(fresh.select(col("id"), col("sub"), col("code"))),
+      ivf = ivf.map(i => i.copy(cells = i.cells.unionAll(
+        fresh.filter(col("sub") === 0).select(col("id"), col("centroid_id"))))))
+  }
+
+  /** The coarse quantizer of an IVF [[PqIndex]] (the full FAISS
+    * `IndexIVFPQ` shape, Jégou et al. TPAMI 2011 §V): vectors are
+    * coarse-quantized into `nCentroids` IVF cells and the PQ codebooks
+    * are trained on RESIDUALS r = v − μ(cell) rather than the raw
+    * vectors. The recentring vector μ is the cell's MEMBER MEAN —
+    * exactly what a trained coarse quantizer converges to — NOT the
+    * deterministic seed vector that names the cell: cells stay the
+    * cheap smallest-id-seed assignment (shared with the flat index, so
+    * q190's uplift comparison holds candidates fixed), while
+    * recentring is optimal for those cells (E‖v−μ‖² = within-cell
+    * variance ≤ E‖v‖², guaranteed — recentring on the unit seed vector
+    * instead MEASURED ‖r‖ ≈ 1.21 > ‖v‖ on this corpus and made recall
+    * WORSE). Smaller residual spread means the same code budget
+    * (m × kCodes) resolves finer — that is the uplift. The price: ADC
+    * lookup tables become per-(query, probed cell) — the query's
+    * residual differs per cell — so no flat compressed scan exists;
+    * search is inherently cell-blocked.
+    *
+    * The frames make the index SELF-CONTAINED (nothing re-derived from
+    * a corpus at serve time — the [[savePqIndex]] lifecycle
+    * requirement, and the only way a frozen-quantizer add can exist):
+    * `coarse` the nCentroids seed centroids (c_id, cv, cn) the coarse
+    * quantizer ranks against, `recenter` the (c_id, mv) per-cell mean
+    * frame (6-dp rounded — the k-means trajectory convention), and
+    * `cells` the indexed vectors' cell assignment (id, centroid_id)
+    * the candidate filter joins. */
+  final case class PqIvf(nCentroids: Int, coarse: DataFrame,
+                         recenter: DataFrame, cells: DataFrame)
+
+  /** The one step an IVF index adds to the flat add and drift paths:
+    * each row's `v` recentred on its cell's frozen member mean,
+    * v − μ(cell) — the quantity the residual codes encode. `assign`
+    * gives `vecs` its cell (a `centroid_id` column): the stored
+    * assignment for indexed ids, the frozen coarse quantizer for fresh
+    * ones. The other columns of the assigned frame pass through.
+    * Identity on a flat index. */
+  private def residualise(index: PqIndex, vecs: DataFrame)
+                         (assign: PqIvf => DataFrame): DataFrame =
+    index.ivf.fold(vecs)(ivf => recentre(assign(ivf), ivf.recenter))
+
+  /** `assigned` rows (a `v` and its cell `centroid_id`) with `v`
+    * replaced by v − mv of the cell's (c_id, mv) row in `recenter` (a
+    * broadcast join); the other columns pass through. */
+  private def recentre(assigned: DataFrame, recenter: DataFrame): DataFrame =
+    assigned
+      .join(broadcast(recenter), col("centroid_id") === col("c_id"))
+      .select(assigned.columns.filter(_ != "v").map(col).toIndexedSeq :+
+        zip_with(col("v"), col("mv"), (a, b) => a - b).as("v"): _*)
 
   /** Train codebooks and encode the corpus once (the expensive tier of
     * every PQ query: subvector explode + `iters`+1 assignment passes).
@@ -1198,16 +1292,14 @@ object Similarity {
               idCol: String = "vec_id",
               vecCol: String = "embedding"): PqIndex = {
     import org.apache.spark.storage.StorageLevel
-    val (subs, cents) = pqCore(
+    val (codes, cents) = pqCore(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
       m, dsub, kCodes, iters)
-    val codes = pqAssignCore(subs, cents)
-      .select(col("id"), col("sub"), col("best.c_id").as("code"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    PqIndex(m, dsub, codes, cents)
+    PqIndex(m, dsub,
+      codes.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER), cents)
   }
 
-  /** Erasure applied to a built [[PqIndex]] WITHOUT retraining — the
+  /** Erasure applied to a built flat [[PqIndex]] WITHOUT retraining — the
     * FAISS remove_ids() half of the GDPR path: a delete-key feed
     * (takedowns, erasure requests) anti-joins the codes table, so a
     * deleted vector can never appear in any subsequent search, while
@@ -1219,87 +1311,130 @@ object Similarity {
     *
     * Scale: one id-equi anti-join on the skinny (id, sub, code) frame
     * against the (broadcastable) delete-key set; codebooks untouched. */
-  def erasePqIndex(index: PqIndex, deleteKeys: DataFrame): PqIndex =
+  def erasePqIndex(index: PqIndex, deleteKeys: DataFrame): PqIndex = {
+    requireFlat(index, "erasePqIndex")
     index.copy(codes = index.codes.join(
       deleteKeys.toDF("id").select(col("id")), Seq("id"), "left_anti"))
+  }
 
-  /** Persist a [[PqIndex]] as three parquet dirs under `dir`
-    * (`codes/`, `cents/`, `meta/`) — the missing half of the FAISS
-    * train→add→search lifecycle: at 100 TB the build (multiple
-    * corpus passes) runs ONCE in a training job, and every serving
-    * job [[loadPqIndex]]s the artifact instead of retraining. Codes
-    * are the corpus-sized table (write dominates); codebooks and the
-    * 1-row geometry frame are kilobytes. */
+  /** Persist a [[PqIndex]] as parquet dirs under `dir` — the missing
+    * half of the FAISS train→add→search lifecycle: at 100 TB the build
+    * (multiple corpus passes) runs ONCE in a training job, and every
+    * serving job [[loadPqIndex]]s the artifact instead of retraining.
+    * `codes/`, `cents/` and the 1-row geometry frame `meta/` (m, dsub,
+    * n_centroids — null for a flat index) always; an IVF index adds
+    * `cells/`, `recenter/` and `coarse/`. Codes and cells are the
+    * corpus-sized tables (write dominates); codebooks, recentring
+    * means, coarse seeds and meta are kilobytes. */
   def savePqIndex(index: PqIndex, dir: String): Unit = {
     index.codes.write.mode("overwrite").parquet(s"$dir/codes")
+    index.ivf.foreach(_.cells.write.mode("overwrite").parquet(s"$dir/cells"))
     index.cents.write.mode("overwrite").parquet(s"$dir/cents")
+    index.ivf.foreach { ivf =>
+      ivf.recenter.write.mode("overwrite").parquet(s"$dir/recenter")
+      ivf.coarse.write.mode("overwrite").parquet(s"$dir/coarse")
+    }
     val spark = index.codes.sparkSession
     import spark.implicits._
-    Seq((index.m, index.dsub)).toDF("m", "dsub")
+    Seq((index.m, index.dsub, index.ivf.map(_.nCentroids)))
+      .toDF("m", "dsub", "n_centroids")
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Read a [[savePqIndex]] artifact back. Codes load as a plain
-    * parquet scan (lazy — serving reads ARE the deployment shape;
+  /** Read a [[savePqIndex]] artifact back. Frames load as plain
+    * parquet scans (lazy — serving reads ARE the deployment shape;
     * callers that search many batches in one session may
     * localCheckpoint). Search results over a loaded index are
-    * bit-identical to the in-session build: codes and codebooks are
-    * exact integers/doubles, and parquet round-trips both exactly. */
+    * bit-identical to the in-session build: codes, codebooks, means
+    * and seeds are exact integers/doubles, and parquet round-trips
+    * them exactly. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   dir: String): PqIndex = {
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
+    def read(frame: String) = spark.read.parquet(s"$dir/$frame")
     PqIndex(meta.getAs[Int]("m"), meta.getAs[Int]("dsub"),
-      spark.read.parquet(s"$dir/codes"),
-      spark.read.parquet(s"$dir/cents"))
+      read("codes"), read("cents"),
+      Option(meta.getAs[Integer]("n_centroids")).map(n =>
+        PqIvf(n, read("coarse"), read("recenter"), read("cells"))))
   }
 
   /** FAISS `add()` semantics: encode `delta` vectors with the index's
-    * FROZEN codebooks — no retraining — and append their codes. The
-    * serve-time growth path for a streaming corpus: assignment is the
-    * same broadcast-codebook argmin as the build's final pass (one
+    * FROZEN quantizers — no retraining — and append their codes (and,
+    * for an IVF index, their cell assignments). The serve-time growth
+    * path for a streaming corpus: assignment is the same
+    * broadcast-codebook argmin as the build's final pass (one
     * projection + map-side min_by over the delta only), and ONLY the
-    * delta codes are materialized (eager delta-sized checkpoint; the
-    * grown `codes` is a lazy union over the base's already-
-    * checkpointed blocks), so k successive adds cost O(Σ deltas)
-    * encode/storage — never k rewrites of the grown codes table. The
-    * one base-sized touch per add is a read-only id scan: delta ids
-    * already present in the index are dropped (left_anti against the
-    * codes' id set — one row per id via the sub=0 slice), so re-adding
-    * a batch is a no-op instead of silently double-counting every
-    * downstream ADC sum with duplicate (id, sub) rows. Quantization
-    * error for delta vectors is measured against the TRAINING
-    * distribution — retrain when a drift gate (the q116/q136 pattern)
-    * says the delta no longer looks like the training corpus. */
+    * delta rows are materialized (eager delta-sized checkpoint; the
+    * grown frames are lazy unions over the base's already-checkpointed
+    * blocks), so k successive adds cost O(Σ deltas) encode/storage —
+    * never k rewrites of the grown codes table. The one base-sized
+    * touch per add is a read-only id scan ([[PqIndex.ids]]): delta ids
+    * already present in the index are dropped (left_anti), so
+    * re-adding a batch is a no-op instead of silently double-counting
+    * every downstream ADC sum with duplicate (id, sub) rows.
+    *
+    * On an IVF index everything is FROZEN: delta vectors coarse-assign
+    * against the stored seed centroids (the [[ivfAssign]] convention,
+    * so an added vector lands exactly where a from-scratch assignment
+    * against the same seeds would put it), recentre on the frozen
+    * per-cell member means, and encode against the frozen residual
+    * codebooks. The recentring means deliberately do NOT update (the
+    * stored codes were encoded against them, and a moved mean would
+    * silently skew every existing cell's geometry).
+    *
+    * Quantization error for delta vectors is measured against the
+    * TRAINING distribution — retrain when a drift gate
+    * ([[pqDriftStats]], the q116/q136 pattern) says the delta no
+    * longer looks like the training corpus. */
   def pqIndexAdd(index: PqIndex, delta: DataFrame,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): PqIndex = {
     import org.apache.spark.storage.StorageLevel
-    val indexedIds = index.codes.filter(col("sub") === 0).select(col("id"))
-    val newCodes = pqEncodeFresh(index, delta, indexedIds, idCol, vecCol)
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    index.copy(codes = index.codes.unionAll(newCodes))
+    index.grown(pqEncodeFresh(index, delta, index.ids, idCol, vecCol)
+      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
   }
 
-  /** Frozen-codebook encode of `delta` vectors EXCLUDING ids already
+  /** Frozen-quantizer encode of `delta` vectors EXCLUDING ids already
     * in `seenIds` (an `id`-column frame) — the codes-only half of
     * [[pqIndexAdd]], exposed for the streaming ingest path
-    * ([[graft.stream.VectorIngest]]), which persists per-batch code
+    * ([[graft.stream.VectorIngest]]), which persists per-batch
     * partitions instead of growing an in-memory index. Returns the
-    * LAZY (id, sub, code) frame; callers pin or write it. */
+    * LAZY (id, sub, code) frame; on an IVF index the cell assignment
+    * rides on every code row as a fourth column, `centroid_id`
+    * (recoverable as the sub = 0 slice), so one partition write
+    * captures both halves of the grown state. Callers pin or write
+    * it. */
   def pqEncodeFresh(index: PqIndex, delta: DataFrame,
                     seenIds: DataFrame,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    val m = index.m
-    val dsub = index.dsub
-    val subs = delta
+    val fresh = delta
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .join(seenIds.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
+    val resid = residualise(index, fresh) { ivf =>
+      // coarse assignment against the FROZEN stored seeds (6-dp cosine
+      // argmax, smallest-c_id ties — the ivfAssign convention):
+      // broadcast nCentroids rows, map-side-collapsed argmax (the
+      // ivfAssign2 join-side shape — no driver model needed for an add)
+      val denom = col("nrm") * col("cn")
+      val sim = when(denom === 0.0, 0.0)
+        .otherwise(dot(col("v"), col("cv")) / denom)
+      fresh.withColumn("nrm", norm(col("v")))
+        .join(broadcast(ivf.coarse.select(col("c_id"), col("cv"),
+          col("cn"))), lit(true))
+        .select(col("id"), col("v"), col("c_id"), round(sim, 6).as("_s"))
+        .groupBy(col("id"))
+        .agg(max_by(struct(col("v"), col("c_id")),
+          struct(col("_s"), (-col("c_id")).as("_t"))).as("b"))
+        .select(col("id"), col("b.v").as("v"),
+          col("b.c_id").as("centroid_id"))
+    }
+    val subs = resid.select(
+      resid.columns.filter(_ != "v").map(col).toIndexedSeq :+
+        subvectors(col("v"), index.m, index.dsub): _*)
     pqAssignCore(subs, index.cents)
-      .select(col("id"), col("sub"), col("best.c_id").as("code"))
+      .select(Seq(col("id"), col("sub"), col("best.c_id").as("code")) ++
+        index.ivf.map(_ => col("centroid_id")): _*)
   }
 
   /** Quantization-drift statistics — the retrain trigger for
@@ -1329,22 +1464,27 @@ object Similarity {
     * CAST errors, could never match). `mean_err` divides the decimal
     * sum exactly back into the per-vector BIGINT range.
     *
+    * On an IVF index the error is against each vector's RESIDUAL
+    * subvectors (v minus its frozen cell mean — the quantity the codes
+    * actually encode). The cell comes from the index's stored
+    * assignment, the mean from the frozen recentring frame, so the
+    * measurement is against the frozen quantizer exactly as served
+    * (the grown-residual retrain trigger, q204).
+    *
     * Scale: one pass over `vectors` (subvector explode ×m), an
     * equi-join against the skinny codes on (id, sub), a broadcast
-    * codebook join, map-side-combined integer sums — the shuffle is
-    * one row per id, then per cohort. */
+    * codebook join (plus, on an IVF index, the cell join and one
+    * broadcast recentring join), map-side-combined integer sums — the
+    * shuffle is one row per id, then per cohort. */
   def pqDriftStats(index: PqIndex, vectors: DataFrame, cohort: Column,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val m = index.m
-    val dsub = index.dsub
-    def micro(x: Column) = floor(x * 1e6 + lit(0.5)).cast("long")
-    val subs = vectors
+    val vecs = vectors
       .select(col(idCol).as("id"), cohort.as("cohort"),
         asDouble(col(vecCol)).as("v"))
-      .select(col("id"), col("cohort"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
+    val subs = residualise(index, vecs)(ivf => vecs.join(ivf.cells, Seq("id")))
+      .select(col("id"), col("cohort"),
+        subvectors(col("v"), index.m, index.dsub))
     val cents = index.cents.select(col("sub").as("csub"),
       col("c_id"), col("cv"))
     val err = subs
@@ -1352,10 +1492,7 @@ object Similarity {
       .join(broadcast(cents),
         col("sub") === col("csub") && col("code") === col("c_id"))
       .select(col("id"), col("cohort"),
-        aggregate(
-          zip_with(col("sv"), col("cv"),
-            (a, b) => (micro(a) - micro(b)) * (micro(a) - micro(b))),
-          lit(0L), (acc, x) => acc + x).as("e2"))
+        microDist2(col("sv"), col("cv")).as("e2"))
     err.groupBy(col("id"), col("cohort"))
       .agg(sum(col("e2")).as("err"))
       .groupBy(col("cohort"))
@@ -1948,8 +2085,8 @@ object Similarity {
 
   /** Cell-ASSIGNMENT drift between two cohorts of an index — the
     * coarse-quantizer staleness signal that complements the code-level
-    * drift gates ([[pqDriftStats]]/[[residualPqDriftStats]] measure
-    * how well the codebooks still fit; this measures whether new data
+    * drift gate ([[pqDriftStats]] measures how well the codebooks
+    * still fit, on either index kind; this measures whether new data
     * still LANDS like the training data): PSI over the per-cell
     * assignment shares, reference = rows where `isCurrent` is false,
     * current = rows where it is true. A delta that concentrates in a
@@ -1988,61 +2125,6 @@ object Similarity {
         count(lit(1)).as("n_cells"),
         sum(col("scored")).as("n_scored_cells"),
         round(sum(col("t_nano")) / 1e3).cast("long").as("psi_micro"))
-  }
-
-  /** [[pqDriftStats]] for a [[ResidualPqIndex]] — the retrain trigger
-    * for [[residualPqIndexAdd]], completing the residual lifecycle's
-    * measure step: per cohort, the mean ADC reconstruction error of
-    * each vector's codes against its own RESIDUAL subvectors (v minus
-    * its frozen cell mean — the quantity the codes actually encode),
-    * in exact integer micro². The cell comes from the index's stored
-    * assignment, the mean from the frozen recentring frame, so the
-    * measurement is against the frozen quantizer exactly as served.
-    * Emits (cohort, n_vecs, sum_err, mean_err) — sum_err accumulated
-    * decimal(38,0) but emitted BIGINT, mean via exact integer
-    * division (the [[pqDriftStats]] conventions).
-    *
-    * Scale: identical to [[pqDriftStats]] plus one broadcast
-    * recentring join — the shuffle is one row per id, then per
-    * cohort. */
-  def residualPqDriftStats(index: ResidualPqIndex, vectors: DataFrame,
-                           cohort: Column,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
-    val m = index.m
-    val dsub = index.dsub
-    def micro(x: Column) = floor(x * 1e6 + lit(0.5)).cast("long")
-    val resid = vectors
-      .select(col(idCol).as("id"), cohort.as("cohort"),
-        asDouble(col(vecCol)).as("v"))
-      .join(index.cells, Seq("id"))
-      .join(broadcast(index.recenter), col("centroid_id") === col("c_id"))
-      .select(col("id"), col("cohort"),
-        zip_with(col("v"), col("mv"), (a, b) => a - b).as("v"))
-    val subs = resid.select(col("id"), col("cohort"), posexplode(
-      transform(sequence(lit(0), lit(m - 1)),
-        s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
-    val cents = index.cents.select(col("sub").as("csub"),
-      col("c_id"), col("cv"))
-    val err = subs
-      .join(index.codes, Seq("id", "sub"))
-      .join(broadcast(cents),
-        col("sub") === col("csub") && col("code") === col("c_id"))
-      .select(col("id"), col("cohort"),
-        aggregate(
-          zip_with(col("sv"), col("cv"),
-            (a, b) => (micro(a) - micro(b)) * (micro(a) - micro(b))),
-          lit(0L), (acc, x) => acc + x).as("e2"))
-    err.groupBy(col("id"), col("cohort"))
-      .agg(sum(col("e2")).as("err"))
-      .groupBy(col("cohort"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(col("err").cast("decimal(38,0)")).as("sum_err_dec"))
-      .select(col("cohort"), col("n_vecs"),
-        decToLongStrict(col("sum_err_dec"), "sum_err").as("sum_err"),
-        decToLongStrict(expr("sum_err_dec div n_vecs"), "mean_err")
-          .as("mean_err"))
-      .orderBy(col("cohort"))
   }
 
   /** SQ8 compressed top-k scan (the FAISS `IndexScalarQuantizer`
@@ -2375,12 +2457,18 @@ object Similarity {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** Flat ADC ranking tail over a prebuilt [[PqIndex]] — the
+  private def requireFlat(index: PqIndex, op: String): Unit =
+    require(index.ivf.isEmpty,
+      s"$op needs a flat PQ index (from pqBuild); this one is IVF " +
+        "(residual codes)")
+
+  /** Flat ADC ranking tail over a prebuilt flat [[PqIndex]] — the
     * compressed linear scan of [[pqAdcTopK]] minus the build. */
   def pqAdcSearch(index: PqIndex, queries: DataFrame, k: Int,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    requireFlat(index, "pqAdcSearch")
     val codes = index.codes
     val lut = pqLut(queries, index.cents, index.m, index.dsub,
       idCol, vecCol)
@@ -2396,16 +2484,24 @@ object Similarity {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** IVF-blocked ADC ranking tail over a prebuilt [[PqIndex]] — the
-    * [[ivfPqTopK]] plan minus the build: cell filter first (id→cell
-    * contraction vs the broadcast probe list), then the ×m code
-    * expansion, then the map-side-collapsed LUT sums. `corpus` is
-    * consulted only for cell assignment and probe choice. */
+  /** IVF-blocked ADC ranking tail over a prebuilt flat [[PqIndex]]
+    * (the FAISS `IndexIVFPQ` shape, Jégou et al. TPAMI 2011 §V, minus
+    * residual encoding — raw-vector codes serve both the flat and the
+    * blocked scan; the residual path is an IVF index searched by
+    * [[residualPqSearch]]): cell filter first (id→cell contraction vs
+    * the broadcast probe list, so unprobed cells never produce code
+    * rows), then the ×m code expansion, then the map-side-collapsed
+    * LUT sums. `corpus` is consulted only for cell assignment and
+    * probe choice, which replay [[ivfTopK]]'s 6-dp cosine with
+    * smallest-centroid-id ties; ranking ties on candidate id. Recall
+    * loss vs the flat scan is cell-boundary truncation —
+    * [[pqAdcBlockingRecall]] measures it. */
   def ivfPqSearch(index: PqIndex, corpus: DataFrame, queries: DataFrame,
                   k: Int, nCentroids: Int = 16, nProbe: Int = 4,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    requireFlat(index, "ivfPqSearch")
     val cells = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
       .select(col("id"), col("centroid_id"))
     val probes = ivfProbes(corpus, queries, nCentroids, nProbe,
@@ -2467,113 +2563,25 @@ object Similarity {
     pqAdcSearch(pqBuild(corpus, m, dsub, kCodes, iters, idCol, vecCol),
       queries, k, idCol, vecCol)
 
-  /** IVF-blocked ADC top-k search — [[ivfTopK]]'s cell blocking
-    * composed with [[pqAdcTopK]]'s compressed scoring (the FAISS
-    * `IndexIVFPQ` shape, Jégou et al. TPAMI 2011 §V, minus residual
-    * encoding: codes are trained on the raw vectors so one codebook
-    * serves both the flat and the blocked scan, and the q177/q185
-    * oracles share one training replay — residual PQ buys recall at
-    * the cost of a per-cell-recentred trajectory; that path is
-    * implemented as [[residualPqBuild]]/[[residualPqSearch]], with
-    * the measured uplift gated by [[residualUpliftStats]]).
-    * Queries rank ONLY the vectors in
-    * their `nProbe` nearest cells, by the same exact integer-micro²
-    * LUT sums as the flat scan.
-    *
-    * Determinism: cell assignment and probe choice replay ivfTopK's
-    * 6-dp-rounded cosine with smallest-centroid-id ties; LUT and ADC
-    * sums are pqAdcTopK's exact integers; ranking ties on candidate
-    * id.
-    *
-    * Scale: THE 100 TB ANN shape — sub-linear candidate generation
-    * (nProbe/nCentroids of the corpus) × compressed per-candidate
-    * cost (m one-byte codes off a broadcast LUT, never the floats).
-    * The cell filter runs BEFORE the ×m code expansion (an equi-join
-    * of the id→cell contraction against the broadcast probe list), so
-    * unprobed cells never produce code rows; the per-(query, cand)
-    * m-term sum collapses map-side exactly as in pqAdcTopK. Recall
-    * loss vs the flat scan is cell-boundary truncation — measure with
-    * [[recallAtK]] against [[pqAdcTopK]] (isolating blocking loss)
-    * or [[bruteTopK]] (total loss), the q178 pattern. */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                nCentroids: Int = 16, nProbe: Int = 4,
-                m: Int = 8, dsub: Int = 8, kCodes: Int = 8,
-                iters: Int = 1,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame =
-    ivfPqSearch(pqBuild(corpus, m, dsub, kCodes, iters, idCol, vecCol),
-      corpus, queries, k, nCentroids, nProbe, idCol, vecCol)
-
-  /** Blocking-loss eval of [[ivfPqTopK]] against [[pqAdcTopK]] from
-    * ONE shared training pass — semantically identical to
-    * `recallAtK(pqAdcTopK(…), ivfPqTopK(…))` (asserted in ExtSpec)
-    * but trains the codebooks and encodes the corpus once instead of
-    * twice, matching the oracle, which shares one training replay
-    * across both rankings. The result isolates CELL TRUNCATION loss:
-    * both rankings use the same codes and LUT, so any rank-k
-    * difference comes from candidates outside the probed cells.
-    *
-    * Scale: training and encoding (the dominant cost at eval corpus
-    * sizes) run once; codes are checkpointed for the two ranking
-    * consumers; everything else is the flat/blocked tails unchanged. */
-  def pqAdcBlockingRecall(corpus: DataFrame, queries: DataFrame, k: Int,
-                          nCentroids: Int = 16, nProbe: Int = 4,
-                          m: Int = 8, dsub: Int = 8, kCodes: Int = 8,
-                          iters: Int = 1,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame =
-    pqAdcBlockingRecall(
-      pqBuild(corpus, m, dsub, kCodes, iters, idCol, vecCol),
-      corpus, queries, k, nCentroids, nProbe, idCol, vecCol)
-
-  /** [[pqAdcBlockingRecall]] over a prebuilt index: the flat and
-    * blocked rankings are [[pqAdcSearch]]/[[ivfPqSearch]] verbatim
-    * (ONE shared code/LUT formulation, so a quantization change can
-    * never desynchronize them); only the n_q·m·k-row LUT is derived
-    * twice — kilobytes. */
+  /** Blocking-loss eval of [[ivfPqSearch]] against [[pqAdcSearch]]
+    * over ONE prebuilt flat index — `recallAtK(flat, blocked)`,
+    * matching the oracle, which shares one training replay across both
+    * rankings. The result isolates CELL TRUNCATION loss: both rankings
+    * use the same codes and LUT formulation (so a quantization change
+    * can never desynchronize them), and any rank-k difference comes
+    * from candidates outside the probed cells. Only the n_q·m·k-row
+    * LUT is derived twice — kilobytes. */
   def pqAdcBlockingRecall(index: PqIndex, corpus: DataFrame,
                           queries: DataFrame, k: Int,
-                          nCentroids: Int, nProbe: Int,
-                          idCol: String, vecCol: String): DataFrame =
+                          nCentroids: Int = 16, nProbe: Int = 4,
+                          idCol: String = "vec_id",
+                          vecCol: String = "embedding"): DataFrame =
     recallAtK(
       pqAdcSearch(index, queries, k, idCol, vecCol),
       ivfPqSearch(index, corpus, queries, k, nCentroids, nProbe,
         idCol, vecCol))
 
-  /** A trained RESIDUAL-encoded IVF-PQ index (the full FAISS
-    * `IndexIVFPQ` shape, Jégou et al. TPAMI 2011 §V — the recall
-    * uplift [[ivfPqTopK]]'s scaladoc documents as its trade-off):
-    * vectors are coarse-quantized into `nCentroids` IVF cells and the
-    * PQ codebooks are trained on RESIDUALS r = v − μ(cell) rather than
-    * the raw vectors. The recentring vector μ is the cell's MEMBER
-    * MEAN — exactly what a trained coarse quantizer converges to —
-    * NOT the deterministic seed vector that names the cell: cells stay
-    * the cheap smallest-id-seed assignment (shared with the raw index,
-    * so q190's uplift comparison holds candidates fixed), while
-    * recentring is optimal for those cells (E‖v−μ‖² = within-cell
-    * variance ≤ E‖v‖², guaranteed — recentring on the unit seed
-    * vector instead MEASURED ‖r‖ ≈ 1.21 > ‖v‖ on this corpus and made
-    * recall WORSE). Smaller residual spread means the same code
-    * budget (m × kCodes) resolves finer — that is the uplift. The
-    * price: ADC lookup tables become per-(query, probed cell) — the
-    * query's residual differs per cell — so no flat compressed scan
-    * exists; search is inherently cell-blocked.
-    *
-    * `recenter` is the (c_id, mv) per-cell mean frame (6-dp rounded —
-    * the k-means trajectory convention), `codes` the residual-encoded
-    * corpus (id, sub, code), `cents` the residual codebooks. The index
-    * is SELF-CONTAINED (nothing re-derived from a corpus at serve
-    * time — the [[savePqIndex]] lifecycle requirement, and the only
-    * way a frozen-quantizer add can exist): `coarse` carries the
-    * nCentroids seed centroids (c_id, cv, cn) the coarse quantizer
-    * ranks against, and `cells` the indexed vectors' cell assignment
-    * (id, centroid_id) the candidate filter joins. */
-  final case class ResidualPqIndex(m: Int, dsub: Int, nCentroids: Int,
-                                   codes: DataFrame, cents: DataFrame,
-                                   recenter: DataFrame, coarse: DataFrame,
-                                   cells: DataFrame)
-
-  /** Train a [[ResidualPqIndex]]: coarse-assign every vector to its
+  /** Train an IVF [[PqIndex]] ([[PqIvf]]): coarse-assign every vector to its
     * IVF cell ([[ivfAssign]] — 6-dp-rounded cosine argmax, smallest-id
     * ties), compute each cell's member mean (round 6 dp per dimension,
     * the k-means convention), subtract it element-wise (exact IEEE
@@ -2594,7 +2602,7 @@ object Similarity {
                       m: Int = 8, dsub: Int = 8, kCodes: Int = 8,
                       iters: Int = 1,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): ResidualPqIndex = {
+                      vecCol: String = "embedding"): PqIndex = {
     import org.apache.spark.storage.StorageLevel
     require(nCentroids > 0, "nCentroids must be positive")
     // (id, v, nrm, centroid_id) — consumed twice (means + residuals)
@@ -2605,29 +2613,21 @@ object Similarity {
         .as("mv"))
       .select(col("centroid_id").as("c_id"), col("mv"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val resid = assigned
-      .join(broadcast(recenter), col("centroid_id") === col("c_id"))
-      .select(col("id"),
-        zip_with(col("v"), col("mv"), (a, b) => a - b).as("v"))
-    val (subs, cents) = pqCore(resid, m, dsub, kCodes, iters,
-      seedOffset = nCentroids)
-    val codes = pqAssignCore(subs, cents)
-      .select(col("id"), col("sub"), col("best.c_id").as("code"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    // the coarse seed frame rides in the index (nCentroids rows —
-    // kilobytes) so serve/add never re-derive seeds from a corpus;
-    // norms come from the SAME Spark expression the probe ranking
-    // uses, so stored values are bit-identical to the transient path
-    val coarse = corpus
-      .select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .orderBy(col("c_id")).limit(nCentroids)
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    ResidualPqIndex(m, dsub, nCentroids, codes, cents, recenter, coarse,
-      assigned.select(col("id"), col("centroid_id")))
+    val (codes, cents) = pqCore(recentre(assigned, recenter), m, dsub,
+      kCodes, iters, seedOffset = nCentroids)
+    PqIndex(m, dsub,
+      codes.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER), cents,
+      // the coarse seed frame rides in the index (nCentroids rows —
+      // kilobytes) so serve/add never re-derive seeds from a corpus;
+      // norms come from the SAME Spark expression the probe ranking
+      // uses, so stored values are bit-identical to the transient path
+      Some(PqIvf(nCentroids,
+        seedCentroids(corpus, nCentroids, idCol, vecCol)
+          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER),
+        recenter, assigned.select(col("id"), col("centroid_id")))))
   }
 
-  /** Residual-ADC top-k over a prebuilt [[ResidualPqIndex]] — the
+  /** Residual-ADC top-k over a prebuilt IVF [[PqIndex]] — the
     * [[ivfPqSearch]] plan with per-(query, cell) LUTs: for each of the
     * query's `nProbe` probed cells, the LUT quantizes the QUERY
     * RESIDUAL q − c(cell) against the residual codebooks (exact
@@ -2642,34 +2642,31 @@ object Similarity {
     * recompute-from-corpus path for a fresh build, and the ONLY
     * correct path for a loaded or grown index (re-deriving seeds from
     * the grown corpus would elect different centroids). */
-  def residualPqSearch(index: ResidualPqIndex,
+  def residualPqSearch(index: PqIndex,
                        queries: DataFrame, k: Int, nProbe: Int = 4,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = index.cells
-    val probes = ivfProbesFrom(index.coarse, queries, nProbe,
+    require(index.ivf.isDefined,
+      "residualPqSearch needs an IVF PQ index (from residualPqBuild); " +
+        "this one is flat — search it with pqAdcSearch or ivfPqSearch")
+    val ivf = index.ivf.get
+    val cells = ivf.cells
+    val probes = ivfProbesFrom(ivf.coarse, queries, nProbe,
       idCol, vecCol)
     // per-(query, probed cell) residual, sliced into subvectors. A
     // probed cell with no members has no recentring mean (and no
     // candidates either) — the inner join drops it consistently.
     val qres = probes
-      .join(broadcast(index.recenter), col("centroid_id") === col("c_id"))
+      .join(broadcast(ivf.recenter), col("centroid_id") === col("c_id"))
       .select(col("qid"), col("centroid_id"),
         zip_with(col("qv"), col("mv"), (a, b) => a - b).as("rv"))
-    val m = index.m
-    val dsub = index.dsub
-    val qsubs = qres.select(col("qid"), col("centroid_id"), posexplode(
-      transform(sequence(lit(0), lit(m - 1)),
-        s => slice(col("rv"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
-    def micro(x: Column) = floor(x * 1e6 + lit(0.5)).cast("long")
+    val qsubs = qres.select(col("qid"), col("centroid_id"),
+      subvectors(col("rv"), index.m, index.dsub))
     val lut = qsubs.join(broadcast(index.cents), "sub")
       .select(col("qid").as("lqid"), col("centroid_id").as("lcell"),
         col("sub").as("lsub"), col("c_id").as("lcode"),
-        aggregate(
-          zip_with(col("sv"), col("cv"),
-            (a, b) => (micro(a) - micro(b)) * (micro(a) - micro(b))),
-          lit(0L), (acc, x) => acc + x).as("dm"))
+        microDist2(col("sv"), col("cv")).as("dm"))
     val cand = cells
       .join(broadcast(probes.select(col("qid"), col("centroid_id"))),
         Seq("centroid_id"))
@@ -2688,131 +2685,6 @@ object Similarity {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** Persist a [[ResidualPqIndex]] as six parquet dirs under `dir` —
-    * the [[savePqIndex]] lifecycle for the better-recall residual
-    * index: codes + cells are the corpus-sized tables (write
-    * dominates); codebooks, recentring means, coarse seeds and the
-    * 1-row geometry frame are kilobytes. Everything the search path
-    * consumes is stored exactly (integer codes, 6-dp-rounded doubles,
-    * raw seed doubles) — parquet round-trips all of it bit-for-bit,
-    * so a reloaded index searches identically to the in-session
-    * build. */
-  def saveResidualPqIndex(index: ResidualPqIndex, dir: String): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    index.cells.write.mode("overwrite").parquet(s"$dir/cells")
-    index.cents.write.mode("overwrite").parquet(s"$dir/cents")
-    index.recenter.write.mode("overwrite").parquet(s"$dir/recenter")
-    index.coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    Seq((index.m, index.dsub, index.nCentroids))
-      .toDF("m", "dsub", "n_centroids")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Read a [[saveResidualPqIndex]] artifact back — lazy parquet
-    * scans, the [[loadPqIndex]] contract (serving reads ARE the
-    * deployment shape; long-serving sessions may localCheckpoint). */
-  def loadResidualPqIndex(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): ResidualPqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-    ResidualPqIndex(meta.getAs[Int]("m"), meta.getAs[Int]("dsub"),
-      meta.getAs[Int]("n_centroids"),
-      spark.read.parquet(s"$dir/codes"),
-      spark.read.parquet(s"$dir/cents"),
-      spark.read.parquet(s"$dir/recenter"),
-      spark.read.parquet(s"$dir/coarse"),
-      spark.read.parquet(s"$dir/cells"))
-  }
-
-  /** FAISS `add()` for the residual index — everything FROZEN: delta
-    * vectors coarse-assign against the stored seed centroids (6-dp
-    * cosine argmax, smallest-c_id ties — the [[ivfAssign]]
-    * convention, so an added vector lands exactly where a from-scratch
-    * assignment against the same seeds would put it), recentre on the
-    * frozen per-cell member means, and encode against the frozen
-    * residual codebooks. No retraining anywhere; the recentring means
-    * deliberately do NOT update (they are part of the frozen quantizer
-    * — the stored codes were encoded against them, and a moved mean
-    * would silently skew every existing cell's geometry). Drift of
-    * the added data against the frozen frame is what the q199-style
-    * gate measures; retrain when it trips.
-    *
-    * Cost discipline is [[pqIndexAdd]]'s: only the delta's assignment
-    * (and its codes/cells rows) materializes — eager delta-sized
-    * checkpoints, lazy unions over the base's existing blocks — plus
-    * one read-only base id scan for the duplicate guard (re-adding an
-    * indexed id is a no-op, never a double-count). */
-  def residualPqIndexAdd(index: ResidualPqIndex, delta: DataFrame,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): ResidualPqIndex = {
-    import org.apache.spark.storage.StorageLevel
-    val combined = residualEncodeFresh(index, delta,
-        index.cells.select(col("id")), idCol, vecCol)
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    index.copy(
-      codes = index.codes.unionAll(
-        combined.select(col("id"), col("sub"), col("code"))),
-      cells = index.cells.unionAll(
-        combined.filter(col("sub") === 0)
-          .select(col("id"), col("centroid_id"))))
-  }
-
-  /** The codes-only half of [[residualPqIndexAdd]] — everything
-    * FROZEN (coarse seeds, recentring means, residual codebooks), ids
-    * already in `seenIds` dropped — exposed for the streaming ingest
-    * path ([[graft.stream.ResidualVectorIngest]]), which persists
-    * per-batch partitions instead of growing an in-memory index.
-    * Returns the LAZY combined frame (id, sub, code, centroid_id) —
-    * the cell assignment rides on every code row (recoverable as the
-    * sub = 0 slice) so one partition write captures both halves of
-    * the grown state; callers pin or write it. */
-  def residualEncodeFresh(index: ResidualPqIndex, delta: DataFrame,
-                          seenIds: DataFrame,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
-    val fresh = delta
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .join(seenIds.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("nrm", norm(col("v")))
-    // coarse assignment against the FROZEN stored seeds: broadcast
-    // nCentroids rows, map-side-collapsed argmax (the ivfAssign2
-    // join-side shape — no driver model needed for an add)
-    val seeds = index.coarse
-      .select(col("c_id"), col("cv"), col("cn"))
-    val denom = col("nrm") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("v"), col("cv")) / denom)
-    val assigned = fresh.join(broadcast(seeds), lit(true))
-      .select(col("id"), col("v"), col("c_id"), round(sim, 6).as("_s"))
-      .groupBy(col("id"))
-      .agg(max_by(struct(col("v"), col("c_id")),
-        struct(col("_s"), (-col("c_id")).as("_t"))).as("b"))
-      .select(col("id"), col("b.v").as("v"),
-        col("b.c_id").as("centroid_id"))
-    val resid = assigned
-      .join(broadcast(index.recenter), col("centroid_id") === col("c_id"))
-      .select(col("id"), col("centroid_id"),
-        zip_with(col("v"), col("mv"), (a, b) => a - b).as("v"))
-    val m = index.m
-    val dsub = index.dsub
-    val subs = resid.select(col("id"), col("centroid_id"), posexplode(
-      transform(sequence(lit(0), lit(m - 1)),
-        s => slice(col("v"), s * dsub + 1, lit(dsub)))).as(Seq("sub", "sv")))
-    // centroid_id is functionally dependent on id — min() is exact,
-    // it just rides the existing (id, sub) collapse
-    subs.join(broadcast(index.cents.select(col("sub").as("csub"),
-        col("c_id"), col("cv"))),
-        col("sub") === col("csub"))
-      .withColumn("_d", round(
-        dot(col("sv"), col("sv")) - lit(2) * dot(col("sv"), col("cv")) +
-          dot(col("cv"), col("cv")), 6))
-      .groupBy(col("id"), col("sub"))
-      .agg(min_by(col("c_id"), struct(col("_d"), col("c_id"))).as("code"),
-        min(col("centroid_id")).as("centroid_id"))
-      .select(col("id"), col("sub"), col("code"), col("centroid_id"))
-  }
-
   /** Residual-vs-raw quantization uplift at EQUAL code budget, against
     * the exact cosine yardstick (the q178 convention), as ONE
     * reduce-order-free integer row: both blocked scans share the same
@@ -2821,7 +2693,7 @@ object Similarity {
     * (n_q, sum_hits_res, sum_hits_plain, mean_recall_res_micro,
     * mean_recall_plain_micro, res_ge_plain) — integer micro means via
     * exact div, never a float average (engine-stable). */
-  def residualUpliftStats(resIndex: ResidualPqIndex, plainIndex: PqIndex,
+  def residualUpliftStats(resIndex: PqIndex, plainIndex: PqIndex,
                           corpus: DataFrame, queries: DataFrame, k: Int,
                           nCentroids: Int, nProbe: Int,
                           idCol: String = "vec_id",
@@ -2906,13 +2778,17 @@ object Similarity {
 
   /** Refine-vs-unrefined recall uplift against the exact yardstick,
     * as ONE reduce-order-free integer row (the [[residualUpliftStats]]
-    * convention): the IVF-PQ first stage runs ONCE at depth `r`
-    * (eagerly pinned — two ranking consumers must not replay the codes
-    * scan); the unrefined ranking is its rank ≤ k prefix, the refined
-    * ranking is [[refineTopK]] over all `r`. `refined_ge_unrefined` is
-    * a theorem (a true top-k member of the shortlist always survives
-    * exact re-ranking), so the flag flipping red means the rounding or
-    * tie conventions desynchronized — a bug, not a tuning outcome.
+    * convention): the first stage runs ONCE at depth `r` (eagerly
+    * pinned — two ranking consumers must not replay the codes scan);
+    * the unrefined ranking is its rank ≤ k prefix, the refined ranking
+    * is [[refineTopK]] over all `r`. The first stage follows the index
+    * kind: [[ivfPqSearch]] over `nCentroids` corpus cells for a flat
+    * index, [[residualPqSearch]] over the stored cells for an IVF one
+    * (the better-recall first stage gets the same measured refine
+    * gate). `refined_ge_unrefined` is a theorem (a true top-k member of
+    * the shortlist always survives exact re-ranking), so the flag
+    * flipping red means the rounding or tie conventions
+    * desynchronized — a bug, not a tuning outcome.
     * Emits (n_q, sum_hits_refined, sum_hits_unrefined,
     * mean_recall_refined_micro, mean_recall_unrefined_micro,
     * refined_ge_unrefined). */
@@ -2925,26 +2801,14 @@ object Similarity {
     // |Q|·r skinny rows — the documented eager-checkpoint class (the
     // shortlist is consumed by both rankings; without pinning, each
     // replays the blocked ADC scan)
-    val shortlist = ivfPqSearch(index, corpus, queries, r, nCentroids,
-      nProbe, idCol, vecCol).localCheckpoint(true)
-    refineUpliftFromShortlist(corpus, queries, shortlist, k,
-      idCol, vecCol)
-  }
-
-  /** [[refineUpliftStats]] on the RESIDUAL index — the better-recall
-    * first stage ([[residualPqSearch]]) gets the same measured refine
-    * gate, completing the refine symmetry across both compressed
-    * paths. Same theorem, same row shape. */
-  def residualRefineUpliftStats(index: ResidualPqIndex,
-                                corpus: DataFrame, queries: DataFrame,
-                                k: Int, r: Int, nProbe: Int = 4,
-                                idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    require(r >= k, s"shortlist depth r=$r must be >= k=$k")
-    val shortlist = residualPqSearch(index, queries, r, nProbe,
-      idCol, vecCol).localCheckpoint(true)
-    refineUpliftFromShortlist(corpus, queries, shortlist, k,
-      idCol, vecCol)
+    val firstStage = index.ivf match {
+      case None => ivfPqSearch(index, corpus, queries, r, nCentroids,
+        nProbe, idCol, vecCol)
+      case Some(_) => residualPqSearch(index, queries, r, nProbe,
+        idCol, vecCol)
+    }
+    refineUpliftFromShortlist(corpus, queries,
+      firstStage.localCheckpoint(true), k, idCol, vecCol)
   }
 
   /** Shared refined-vs-unrefined tail over a PINNED (qid, cid, rank)

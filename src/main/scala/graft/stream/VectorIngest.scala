@@ -3,30 +3,40 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.Similarity
 
 /** Streaming vector ingestion into a persisted PQ index — the
-  * deployment mode of the frozen-codebook add (q198's
+  * deployment mode of the frozen-quantizer add (q198/q202's
   * [[graft.ext.Similarity.pqIndexAdd]]): a continuously arriving
   * embedding stream where every micro-batch must be encoded against
-  * the FROZEN codebooks of a stored base index and appended as codes,
+  * the FROZEN quantizers of a stored base index and appended as codes,
   * with ids already indexed by the base or by ANY earlier batch
   * dropped (a re-sent vector must never double-count in downstream
   * ADC sums), and the grown index must survive restarts without
   * re-admitting or losing vectors. The streaming twin of the batch
   * build→add lifecycle, mirroring [[CurationStream]]'s store layout.
+  * One object serves both index kinds: the delta schema, the seen-id
+  * set and the grown index follow the base's `ivf` (an IVF base
+  * coarse-assigns each batch against its FROZEN stored seeds and
+  * recentres on its FROZEN cell means before encoding).
   *
   * Layout under `indexDir`:
   *   base/   — a [[graft.ext.Similarity.savePqIndex]] artifact
-  *             (codes + codebooks + geometry), written ONCE by the
-  *             training job;
-  *   delta/batch_id=N/ — batch N's fresh-id codes (id, sub, code).
+  *             (codes + codebooks + geometry, plus cells + recenter +
+  *             coarse for an IVF base), written ONCE by the training
+  *             job;
+  *   delta/batch_id=N/ — batch N's fresh-id codes (id, sub, code); an
+  *             IVF base adds `centroid_id` to every code row (the
+  *             sub = 0 slice recovers the cells frame), so ONE
+  *             partition write captures both halves of the grown state
+  *             atomically — a separate cells store could crash out of
+  *             sync with its codes.
   *
   * Batch-N pipeline (inside one foreachBatch, so the seen-id read and
   * the code write see one consistent snapshot): seen = base ids ∪
-  * delta ids of batch_id ≠ N → left-anti the batch → frozen-codebook
+  * delta ids of batch_id ≠ N → left-anti the batch → frozen-quantizer
   * encode ([[graft.ext.Similarity.pqEncodeFresh]]) → overwrite
   * `delta/batch_id=N`.
   *
@@ -48,27 +58,26 @@ import graft.ext.Similarity
   */
 object VectorIngest {
 
-  private val codesSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("sub", IntegerType),
-    StructField("code", LongType)))
-
-  /** All delta-partition codes EXCEPT `excludeBatchId`'s own (pass -1
-    * to read everything). Empty/missing delta dir → empty frame with
-    * the codes schema, so batch 0 needs no special case. */
+  /** All delta-partition rows EXCEPT `excludeBatchId`'s own (pass -1
+    * to read everything), in `base`'s delta schema: (id, sub, code),
+    * plus `centroid_id` for an IVF base. Empty/missing delta dir →
+    * empty frame with that schema, so batch 0 needs no special case. */
   def readDeltaExcept(spark: SparkSession, indexDir: String,
+                      base: Similarity.PqIndex,
                       excludeBatchId: Long): DataFrame = {
+    val schema = StructType.fromDDL("id BIGINT, sub INT, code BIGINT" +
+      base.ivf.fold("")(_ => ", centroid_id BIGINT"))
     val deltaPath = s"$indexDir/delta"
     val p = new org.apache.hadoop.fs.Path(deltaPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val hasData = fs.exists(p) &&
       fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
     if (!hasData)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], codesSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else
       spark.read.option("basePath", deltaPath).parquet(deltaPath)
         .filter(col("batch_id") =!= excludeBatchId)
-        .select(col("id"), col("sub"), col("code"))
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** The per-batch body, exposed (the [[CurationStream.processBatch]]
@@ -82,8 +91,8 @@ object VectorIngest {
     require(batchId >= 0, s"stream batch ids are non-negative: $batchId")
     val spark = batch.sparkSession
     val base = Similarity.loadPqIndex(spark, s"$indexDir/base")
-    val seenIds = base.codes.filter(col("sub") === 0).select(col("id"))
-      .unionAll(readDeltaExcept(spark, indexDir, batchId)
+    val seenIds = base.ids
+      .unionAll(readDeltaExcept(spark, indexDir, base, batchId)
         .filter(col("sub") === 0).select(col("id")))
     Similarity.pqEncodeFresh(base, batch.toDF(), seenIds)
       .write.mode("overwrite")
@@ -91,21 +100,21 @@ object VectorIngest {
   }
 
   /** The served artifact: the stored base plus every delta partition's
-    * codes — bit-identical search results to the batch-built
+    * codes (and, for an IVF base, cell assignments) — bit-identical
+    * search results to the batch-built
     * [[graft.ext.Similarity.pqIndexAdd]] twin over the same fresh
-    * vectors (spec-pinned parity). Delta codes are deduped on
+    * vectors (spec-pinned parity). Delta rows are deduped on
     * (id, sub) at load: normally a no-op (the ingest guard keeps ids
     * disjoint), it exists to make [[compactDeltas]]'s crash window
     * safe — a compacted copy plus not-yet-deleted originals would
     * otherwise double-count in every ADC sum. Dedup is harmless even
-    * then: frozen codebooks make any two code rows for the same
-    * (id, sub) identical, so which copy survives is irrelevant. */
+    * then: frozen quantizers make any two rows for the same (id, sub)
+    * identical, so which copy survives is irrelevant. */
   def loadGrownIndex(spark: SparkSession, indexDir: String)
       : Similarity.PqIndex = {
     val base = Similarity.loadPqIndex(spark, s"$indexDir/base")
-    base.copy(codes = base.codes.unionAll(
-      readDeltaExcept(spark, indexDir, -1L)
-        .dropDuplicates("id", "sub")))
+    base.grown(readDeltaExcept(spark, indexDir, base, -1L)
+      .dropDuplicates("id", "sub"))
   }
 
   /** The partition id compaction rewrites into. RESERVED and
@@ -146,7 +155,8 @@ object VectorIngest {
     * the compacted partition and harmlessly writes an empty one: the
     * codes live on in the compacted copy, nothing is lost. */
   def compactDeltas(spark: SparkSession, indexDir: String): Unit = {
-    val all = readDeltaExcept(spark, indexDir, -1L)
+    val base = Similarity.loadPqIndex(spark, s"$indexDir/base")
+    val all = readDeltaExcept(spark, indexDir, base, -1L)
       .dropDuplicates("id", "sub")
       .localCheckpoint(true)
     val deltaPath = new org.apache.hadoop.fs.Path(s"$indexDir/delta")
@@ -173,15 +183,18 @@ object VectorIngest {
       .option("checkpointLocation", checkpointPath)
 
   /** Stream↔batch parity as an ORACLE row (the q193 pattern applied to
-    * vector ingestion): trains the base index on the 80% cohort
-    * (vec_id % 5 ≠ 0), ingests the 20% delta through a REAL
+    * vector ingestion): trains the base index with `build` on the 80%
+    * cohort (vec_id % 5 ≠ 0), ingests the 20% delta through a REAL
     * foreachBatch stream in two micro-batches — the second RE-SENDING
     * one of the first's ids, so the seen-id guard is exercised on the
-    * wire — then searches the grown ON-DISK artifact. The result must
-    * be bit-identical to the batch-built [[graft.ext.Similarity
-    * .pqIndexAdd]] twin, so the DuckDB oracle is q198's frozen-add
-    * replay VERBATIM: any stream-path divergence (lost batch,
-    * double-admitted id, codec drift) reds the row.
+    * wire — then searches the grown ON-DISK artifact: top-`k` by
+    * [[graft.ext.Similarity.pqAdcSearch]] for a flat base,
+    * [[graft.ext.Similarity.residualPqSearch]] at `nProbe` for an IVF
+    * one. The result must be bit-identical to the batch-built
+    * [[graft.ext.Similarity.pqIndexAdd]] twin, so the DuckDB oracle is
+    * q198's (flat, q220) or q202's (IVF, q226) frozen-add replay
+    * VERBATIM: any stream-path divergence (lost batch, double-admitted
+    * id, desynced cells/codes, codec drift) reds the row.
     *
     * The delta collect is the sanctioned fixture-sized parity-probe
     * class (the Sessionize.horizonParityProbe allowance) — MemoryStream
@@ -189,17 +202,15 @@ object VectorIngest {
     * an isolated 1-shuffle-partition session so state/exchange init
     * costs stay off the probe (the q193 lesson). */
   def ingestParityProbe(spark: SparkSession, emb: DataFrame,
-                        m: Int = 16, dsub: Int = 4, kCodes: Int = 32,
-                        k: Int = 5): DataFrame = {
+                        build: DataFrame => Similarity.PqIndex,
+                        k: Int = 5, nProbe: Int = 4): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_vingest_probe").toString
     try {
       val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-      Similarity.savePqIndex(
-        Similarity.pqBuild(base, m, dsub, kCodes, iters = 1),
-        s"$dir/base")
+      Similarity.savePqIndex(build(base), s"$dir/base")
       val delta = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -216,10 +227,15 @@ object VectorIngest {
         input.addData((b1 ++ b0.take(1)).toSeq: _*)
         q.processAllAvailable()
       } finally q.stop()
+      val grown = loadGrownIndex(spark, dir)
+      val queries = emb.filter(col("vec_id") < 10)
+      val top = grown.ivf match {
+        case None => Similarity.pqAdcSearch(grown, queries, k)
+        case Some(_) =>
+          Similarity.residualPqSearch(grown, queries, k, nProbe)
+      }
       // eager pin BEFORE the temp artifact is deleted
-      Similarity.pqAdcSearch(loadGrownIndex(spark, dir),
-          emb.filter(col("vec_id") < 10), k)
-        .localCheckpoint(true)
+      top.localCheckpoint(true)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(dir))
   }

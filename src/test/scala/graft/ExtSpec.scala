@@ -321,9 +321,9 @@ class ExtSpec extends SparkSpec {
       "a subset-ranking of the flat scan") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") < 10)
-    val blocked = Similarity.ivfPqTopK(emb, q, k = 5,
-      nCentroids = 16, nProbe = 4, m = 16, dsub = 4, kCodes = 32,
-      iters = 1).cache()
+    val blocked = Similarity.ivfPqSearch(
+      Similarity.pqBuild(emb, m = 16, dsub = 4, kCodes = 32, iters = 1),
+      emb, q, k = 5, nCentroids = 16, nProbe = 4).cache()
     val rows = blocked.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(0) != r.getLong(1)))
@@ -343,16 +343,16 @@ class ExtSpec extends SparkSpec {
     assert(joined.filter(col("adist") =!= col("flat_adist")).count() === 0L,
       "blocking changed an ADC score")
     // the one-training eval composition equals the two-operator form
-    val composed = Similarity.pqAdcBlockingRecall(emb, q, k = 5,
-        nCentroids = 16, nProbe = 4, m = 16, dsub = 4, kCodes = 32,
-        iters = 1)
+    val composed = Similarity.pqAdcBlockingRecall(
+        Similarity.pqBuild(emb, m = 16, dsub = 4, kCodes = 32, iters = 1),
+        emb, q, k = 5, nCentroids = 16, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val twoOp = Similarity.recallAtK(
         Similarity.pqAdcTopK(emb, q, k = 5,
           m = 16, dsub = 4, kCodes = 32, iters = 1),
-        Similarity.ivfPqTopK(emb, q, k = 5,
-          nCentroids = 16, nProbe = 4, m = 16, dsub = 4, kCodes = 32,
-          iters = 1))
+        Similarity.ivfPqSearch(
+          Similarity.pqBuild(emb, m = 16, dsub = 4, kCodes = 32, iters = 1),
+          emb, q, k = 5, nCentroids = 16, nProbe = 4))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(composed.toSeq === twoOp.toSeq)
     blocked.unpersist()
@@ -406,7 +406,7 @@ class ExtSpec extends SparkSpec {
       .deleteDirectory(new java.io.File(dir))
   }
 
-  test("ResidualPqIndex persistence + frozen add: round-trip search " +
+  test("IVF PqIndex persistence + frozen add: round-trip search " +
       "bit-identical, add freezes seeds/means/codebooks, re-add no-op") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") < 10)
@@ -416,40 +416,41 @@ class ExtSpec extends SparkSpec {
       m = 16, dsub = 4, kCodes = 32, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("respqidx").toString
     try {
-      Similarity.saveResidualPqIndex(idx, dir)
-      val loaded = Similarity.loadResidualPqIndex(spark, dir)
+      Similarity.savePqIndex(idx, dir)
+      val loaded = Similarity.loadPqIndex(spark, dir)
       assert(loaded.m === 16 && loaded.dsub === 4 &&
-        loaded.nCentroids === 16)
-      def dump(i: Similarity.ResidualPqIndex) =
+        loaded.ivf.map(_.nCentroids) === Some(16))
+      def dump(i: Similarity.PqIndex) =
         Similarity.residualPqSearch(i, q, k = 5, nProbe = 4).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(dump(loaded) === dump(idx),
         "reloaded residual index search diverged from the in-session one")
       // frozen add: seeds, recentring means and codebooks untouched;
       // every corpus id coded and cell-assigned
-      val grown = Similarity.residualPqIndexAdd(idx, delta)
+      val grown = Similarity.pqIndexAdd(idx, delta)
       def frameSet(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).toSet
+      val (ivf, grownIvf) = (idx.ivf.get, grown.ivf.get)
       assert(frameSet(grown.cents) === frameSet(idx.cents),
         "add retrained the residual codebooks")
-      assert(frameSet(grown.recenter) === frameSet(idx.recenter),
+      assert(frameSet(grownIvf.recenter) === frameSet(ivf.recenter),
         "add moved a frozen recentring mean")
-      assert(frameSet(grown.coarse) === frameSet(idx.coarse),
+      assert(frameSet(grownIvf.coarse) === frameSet(ivf.coarse),
         "add changed the coarse seed frame")
       assert(grown.codes.select(col("id")).distinct().count() ===
         emb.count())
-      assert(grown.cells.select(col("id")).distinct().count() ===
+      assert(grownIvf.cells.select(col("id")).distinct().count() ===
         emb.count())
       // every added vector lands in one of the FROZEN base-seed cells
-      val seedIds = idx.coarse.select(col("c_id")).collect()
+      val seedIds = ivf.coarse.select(col("c_id")).collect()
         .map(_.getLong(0)).toSet
-      assert(grown.cells.select(col("centroid_id")).distinct().collect()
+      assert(grownIvf.cells.select(col("centroid_id")).distinct().collect()
         .map(_.getLong(0)).toSet.subsetOf(seedIds),
         "an added vector landed outside the frozen seed cells")
       // re-adding the same delta is a no-op (duplicate guard)
-      val readd = Similarity.residualPqIndexAdd(grown, delta)
+      val readd = Similarity.pqIndexAdd(grown, delta)
       assert(readd.codes.count() === grown.codes.count())
-      assert(readd.cells.count() === grown.cells.count())
+      assert(readd.ivf.get.cells.count() === grownIvf.cells.count())
       // grown-index search matches the registered q202 shape: every
       // result comes from the combined corpus, ranks contiguous
       val rows = Similarity.residualPqSearch(grown, q, k = 5, nProbe = 4)
@@ -462,15 +463,15 @@ class ExtSpec extends SparkSpec {
       .deleteDirectory(new java.io.File(dir))
   }
 
-  test("residualPqDriftStats: cohorts partition, frozen-frame " +
+  test("pqDriftStats on an IVF index: cohorts partition, frozen-frame " +
       "reconstruction error stays bounded for a same-distribution delta") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
-    val grown = Similarity.residualPqIndexAdd(
+    val grown = Similarity.pqIndexAdd(
       Similarity.residualPqBuild(base, nCentroids = 16, m = 16,
         dsub = 4, kCodes = 32, iters = 1), delta)
-    val rows = Similarity.residualPqDriftStats(grown, emb,
+    val rows = Similarity.pqDriftStats(grown, emb,
         when(pmod(col("vec_id"), lit(5)) === 0, lit("delta"))
           .otherwise(lit("base")))
       .collect().map(r => r.getString(0) ->
@@ -1668,15 +1669,56 @@ class ExtSpec extends SparkSpec {
     assert(a.map(_.toString).sorted === b.map(_.toString).sorted)
   }
 
-  test("residualRefineUpliftStats: refined >= unrefined on the residual path") {
+  test("refineUpliftStats on an IVF index: refined >= unrefined on the residual path") {
     val q = refineEmb.filter(col("vec_id") < 3)
     val idx = Similarity.residualPqBuild(refineEmb, nCentroids = 4,
       m = 2, dsub = 2, kCodes = 4)
-    val row = Similarity.residualRefineUpliftStats(idx, refineEmb, q,
+    val row = Similarity.refineUpliftStats(idx, refineEmb, q,
       k = 3, r = 8, nProbe = 2).collect()(0)
     assert(row.getAs[Long]("n_q") === 3L)
     assert(row.getAs[Long]("refined_ge_unrefined") === 1L)
     assert(row.getAs[Long]("mean_recall_refined_micro") <= 1000000L)
+  }
+
+  // one index type serves both kinds, so each search (and the
+  // flat-only erase) checks the kind it was handed; the builds are
+  // tiny, and the guards fire before either index is read
+  private lazy val tinyFlat =
+    Similarity.pqBuild(refineEmb, m = 2, dsub = 2, kCodes = 4)
+  private lazy val tinyIvf = Similarity.residualPqBuild(refineEmb,
+    nCentroids = 4, m = 2, dsub = 2, kCodes = 4)
+
+  test("pqAdcSearch rejects an IVF index, naming the kind") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pqAdcSearch(tinyIvf, refineEmb, k = 3)
+    }
+    assert(e.getMessage.contains("pqAdcSearch needs a flat PQ index"))
+    assert(e.getMessage.contains("this one is IVF"))
+  }
+
+  test("ivfPqSearch rejects an IVF index, naming the kind") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfPqSearch(tinyIvf, refineEmb, refineEmb, k = 3,
+        nCentroids = 4, nProbe = 2)
+    }
+    assert(e.getMessage.contains("ivfPqSearch needs a flat PQ index"))
+    assert(e.getMessage.contains("this one is IVF"))
+  }
+
+  test("erasePqIndex rejects an IVF index, naming the kind") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.erasePqIndex(tinyIvf, refineEmb.select(col("vec_id")))
+    }
+    assert(e.getMessage.contains("erasePqIndex needs a flat PQ index"))
+    assert(e.getMessage.contains("this one is IVF"))
+  }
+
+  test("residualPqSearch rejects a flat index, naming the kind") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.residualPqSearch(tinyFlat, refineEmb, k = 3, nProbe = 2)
+    }
+    assert(e.getMessage.contains("residualPqSearch needs an IVF PQ index"))
+    assert(e.getMessage.contains("this one is flat"))
   }
 
   test("ivfCellDriftStats: identical cohort shares give psi 0; a shift doesn't") {

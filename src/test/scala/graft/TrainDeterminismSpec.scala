@@ -68,8 +68,8 @@ class TrainDeterminismSpec extends SparkSpec {
       m = 2, dsub = 4, kCodes = 4)
     val ib = Similarity.residualPqBuild(parts(emb, 7), nCentroids = 4,
       m = 2, dsub = 4, kCodes = 4)
-    assert(dump(ia.recenter.select(col("c_id"), col("mv").cast("string"))) ===
-      dump(ib.recenter.select(col("c_id"), col("mv").cast("string"))))
+    assert(dump(ia.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))) ===
+      dump(ib.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))))
     assert(dump(ia.cents.select(col("sub"), col("c_id"),
         col("cv").cast("string"))) ===
       dump(ib.cents.select(col("sub"), col("c_id"),

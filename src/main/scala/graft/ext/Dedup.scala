@@ -399,19 +399,30 @@ object Dedup {
     reach
   }
 
-  /** All rows of the (checkpointed) working set `df` when it is small
-    * enough to finish an iterative operator on the driver, else None.
-    * Small means at most the session's `spark.sql.autoBroadcastJoinThreshold`
-    * (the size it already agrees to ship whole to every task) in rows
-    * of `df`'s schema; a threshold ≤ 0 disables the local finish,
+  /** All rows of `df` when it is small enough to finish an operator on
+    * the driver, else None — the one bound rule of every local finish
+    * (the loops here, PQ training in `Similarity.pqCore`, the seen-id
+    * guard of `Similarity.pqEncodeFresh`). Small means at most the
+    * session's `spark.sql.autoBroadcastJoinThreshold` (the size it
+    * already agrees to ship whole to every task) in rows of `df`'s
+    * schema; a threshold ≤ 0 disables the local finish,
     * exactly as it disables broadcast. One bounded fetch both decides
-    * and fetches, so the large path pays only that read. */
-  private def fetchIfSmall(df: DataFrame): Option[Array[Row]] = {
+    * and fetches, so the large path pays only that read. The fetch is
+    * one task reading the partitions in order until it passes the
+    * bound (a plain `take` scans one partition first and then the
+    * rest, two jobs where one does); rows already on the driver (a
+    * local relation) are read without a job. */
+  private[graft] def fetchIfSmall(df: DataFrame): Option[Array[Row]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val bound = math.min(bytes / math.max(1, df.schema.defaultSize),
       Int.MaxValue - 1L).toInt
+    lazy val source = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df
+      case _ => df.coalesce(1)
+    }
     if (bound <= 0) None
-    else Some(df.take(bound + 1)).filter(_.length <= bound)
+    else Some(source.take(bound + 1)).filter(_.length <= bound)
   }
 
   /** Frees the storage of localCheckpoint'd frames nothing reads any

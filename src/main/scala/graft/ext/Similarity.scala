@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`) — extension
@@ -1080,15 +1080,19 @@ object Similarity {
     * the `k` smallest-id vectors (codes ARE those seed ids), L2
     * distances expand to dot products (codegen `DotProduct`, no
     * interpreted zip) and round at 6 dp before the argmin (ties to the
-    * smallest code), means round at 6 dp per dimension, emptied codes
-    * keep their previous centroid — so an oracle replays the exact
-    * trajectory.
+    * smallest code), means are exact integer micro means on the 6-dp
+    * grid, emptied codes keep their previous centroid — so an oracle
+    * replays the exact trajectory.
     *
-    * Scale: codebooks are m·k rows broadcast everywhere; the corpus
-    * never shuffles for assignment — the only exchanges are the
-    * VectorMean partial buffers (m·k per partition) during training.
-    * The subvector frame is localCheckpoint'd once: training and the
-    * final encode rescan it, not the source column. The argmin
+    * Scale: a corpus whose subvector frame fits
+    * `spark.sql.autoBroadcastJoinThreshold` (one bounded fetch, see
+    * [[pqCore]]) trains and encodes on the driver, and the codes come
+    * back as a local relation. Larger corpora train distributed:
+    * codebooks are m·k rows broadcast everywhere; the corpus never
+    * shuffles for assignment — the only exchanges are the
+    * VectorMicroMean partial buffers (m·k per partition) during
+    * training. The subvector frame is localCheckpoint'd once: training
+    * and the final encode rescan it, not the source column. The argmin
     * collapses map-side via min_by, so no n·m·k row window shuffle. */
   def pqEncode(emb: DataFrame, m: Int = 8, dsub: Int = 8, k: Int = 8,
                iters: Int = 1,
@@ -1100,30 +1104,47 @@ object Similarity {
   }
 
   /** PQ training core over a prepared (id, v: array<double>) frame:
-    * returns the LAZY codes (id, sub, code) — the final assignment
-    * pass over the checkpointed subvector frame — and the final
-    * codebooks (sub, c_id, cv). Shared by [[pqEncode]] and the index
-    * builders so the trajectory (seeds, 6-dp argmin/means, empty-code
-    * carry) stays byte-identical between the code dump and the search
-    * path.
+    * returns the codes (id, sub, code) — the final assignment pass over
+    * the subvector frame — and the final codebooks (sub, c_id, cv).
+    * Shared by [[pqEncode]] and the index builders so the trajectory
+    * (seeds, 6-dp argmin/means, empty-code carry) stays byte-identical
+    * between the code dump and the search path.
     * `seedOffset` skips that many smallest-id rows before taking the
     * `k` seed vectors — [[residualPqBuild]] sets it to nCentroids so
     * seeds are never the (~zero) residuals of the coarse centroids
-    * themselves, which would waste codebook entries on duplicates. */
+    * themselves, which would waste codebook entries on duplicates.
+    *
+    * Scale: one bounded fetch of the (id, sub, sv) subvector frame
+    * decides the path ([[Dedup.fetchIfSmall]]: at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes in rows of that
+    * schema, ≤ 0 disables it). When it fits, [[pqTrainLocal]] trains
+    * and encodes on the driver and both frames come back as local
+    * relations — the two-phase finish of Kiveris et al. (SoCC 2014),
+    * which spares a small corpus the ~12 jobs of the distributed
+    * passes, whose time there is scheduling, not arithmetic.
+    * Otherwise the subvector frame is localCheckpoint'd once, training
+    * and the final encode rescan it, each pass broadcasts the m·k
+    * codebook rows and collapses its argmin map-side, and each
+    * superseded codebook checkpoint is released as the next one
+    * lands. With `pin` the codes are checkpointed too, and then the
+    * subvector checkpoint is released unless the (iters = 0)
+    * codebooks still read it; without it the codes stay lazy over
+    * that checkpoint. */
   private def pqCore(vecs: DataFrame, m: Int, dsub: Int, k: Int,
-                     iters: Int, seedOffset: Int = 0): (DataFrame, DataFrame) = {
+                     iters: Int, seedOffset: Int = 0,
+                     pin: Boolean = false): (DataFrame, DataFrame) = {
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.storage.StorageLevel
     require(m > 0 && dsub > 0 && k > 0 && iters >= 0,
       "m, dsub, k must be positive and iters non-negative")
     require(seedOffset >= 0, "seedOffset must be non-negative")
-    val subs = vecs
-      .select(col("id"), subvectors(col("v"), m, dsub))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val lvl = StorageLevel.MEMORY_AND_DISK_SER
+    val exploded = vecs.select(col("id"), subvectors(col("v"), m, dsub))
     val seeds = vecs.select(col("id")).orderBy(col("id"))
       .offset(seedOffset).limit(k)
-    var cents = subs.join(broadcast(seeds), "id")
+    def seedCents(subs: DataFrame) = subs.join(broadcast(seeds), "id")
       .select(col("sub"), col("id").as("c_id"), col("sv").as("cv"))
-    (0 until iters).foreach { _ =>
+    def step(subs: DataFrame, cents: DataFrame) = {
       val means = pqAssignCore(subs, cents)
         .select(col("sub"), col("best.c_id").as("c_id"),
           col("best.sv").as("sv"))
@@ -1131,13 +1152,116 @@ object Similarity {
         .agg(graft.functions.VectorAggregates.vector_micro_mean(col("sv"))
           .as("mv"))
         .select(col("sub"), col("c_id"), col("mv"))
-      cents = cents.join(means, Seq("sub", "c_id"), "left")
+      cents.join(means, Seq("sub", "c_id"), "left")
         .select(col("sub"), col("c_id"),
           coalesce(col("mv"), col("cv")).as("cv"))
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
-    (pqAssignCore(subs, cents)
-      .select(col("id"), col("sub"), col("best.c_id").as("code")), cents)
+    def encode(subs: DataFrame, cents: DataFrame) = pqAssignCore(subs, cents)
+      .select(col("id"), col("sub"), col("best.c_id").as("code"))
+    Dedup.fetchIfSmall(exploded)
+      .flatMap(pqTrainLocal(_, k, iters, seedOffset)) match {
+      case Some((codes, cents)) =>
+        // the distributed frames' schemas, read off their unexecuted plans
+        val centsPlan = (0 until math.min(iters, 1))
+          .foldLeft(seedCents(exploded))((c, _) => step(exploded, c))
+        val spark = vecs.sparkSession
+        (spark.createDataFrame(codes.asJava, encode(exploded, centsPlan).schema),
+          spark.createDataFrame(cents.asJava, centsPlan.schema))
+      case None =>
+        val subs = exploded.localCheckpoint(true, lvl)
+        var cents = seedCents(subs)
+        (0 until iters).foreach { i =>
+          val next = step(subs, cents).localCheckpoint(true, lvl)
+          if (i > 0) Dedup.release(cents)
+          cents = next
+        }
+        val codes = encode(subs, cents)
+        if (!pin) (codes, cents)
+        else {
+          val pinned = codes.localCheckpoint(true, lvl)
+          if (iters > 0) Dedup.release(subs)
+          (pinned, cents)
+        }
+    }
+  }
+
+  /** [[pqCore]]'s trajectory replayed on the driver over its fetched
+    * (id, sub, sv) rows: the same seeds (the `k` smallest ids after
+    * `seedOffset`), the same argmin — `DotProduct`'s loop order, Spark's
+    * `round(_, 6)` ([[graft.functions.Round6]]) and Spark's double
+    * comparison, ties to the smallest code — and the same means,
+    * [[graft.functions.VectorMicroMean]]'s own reduce and finish over
+    * exact Long micros, with emptied codes keeping their centroid. The
+    * 6-dp grid and the integer means make every step independent of
+    * evaluation order, so the rows equal the distributed path's.
+    * Returns the (id, sub, code) and (sub, c_id, cv) rows, or None for
+    * input the replay does not cover: ids that are null, repeated or
+    * neither long nor int, and subvectors that are null, hold a null
+    * or differ in length within a subspace. */
+  private def pqTrainLocal(rows: Array[Row], k: Int, iters: Int,
+                           seedOffset: Int): Option[(Seq[Row], Seq[Row])] = {
+    import graft.functions.{Round6, VectorMicroMean}
+    def key(id: Any): Option[Long] = id match {
+      case l: java.lang.Long => Some(l.longValue)
+      case i: java.lang.Integer => Some(i.longValue)
+      case _ => None
+    }
+    def dotp(a: Array[Double], b: Array[Double]): Double = {
+      val n = math.min(a.length, b.length)
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    // SQLOrderingUtil.compareDoubles: -0.0 = 0.0, NaN above everything
+    def less(x: Double, y: Double): Boolean =
+      x != y && java.lang.Double.compare(x, y) < 0
+    val covered = rows.forall(r => key(r.get(0)).isDefined &&
+      !r.isNullAt(2) && !r.getSeq[Any](2).contains(null))
+    lazy val ids = rows.map(r => key(r.get(0)).get)
+    lazy val sortedIds = ids.distinct.sorted
+    lazy val bySub = rows.indices.groupBy(rows(_).getInt(1)).toSeq.sortBy(_._1)
+    lazy val svs = bySub.map { case (_, is) =>
+      is.map(rows(_).getSeq[Double](2).toArray) }
+    // each vector explodes to one row per subspace, so the ids are
+    // distinct iff there are (distinct ids) × (subspaces) rows
+    val exact = covered &&
+      sortedIds.length * bySub.length == rows.length &&
+      svs.forall(_.map(_.length).distinct.length <= 1)
+    Option.when(exact) {
+      val seedKeys = sortedIds.slice(seedOffset, seedOffset + k)
+      val idOf = rows.indices.map(i => ids(i) -> rows(i).get(0)).toMap
+      val seedIds = seedKeys.map(idOf)
+      bySub.zip(svs).map { case ((sub, is), sv) =>
+        val pos = is.indices.map(p => ids(is(p)) -> p).toMap
+        val svv = sv.map(a => dotp(a, a))
+        def assign(cv: IndexedSeq[Array[Double]]): IndexedSeq[Int] = {
+          val cvv = cv.map(c => dotp(c, c))
+          sv.indices.map { i =>
+            var best = -1
+            var bestD = 0.0
+            cv.indices.foreach { j =>
+              val d = Round6(svv(i) - 2.0 * dotp(sv(i), cv(j)) + cvv(j))
+              if (best < 0 || less(d, bestD)) { best = j; bestD = d }
+            }
+            best
+          }
+        }
+        val seedCv = seedKeys.toIndexedSeq.map(s => sv(pos(s)))
+        val cv = (0 until iters).foldLeft(seedCv) { (cv, _) =>
+          val members = assign(cv).zip(sv).groupMap(_._1)(_._2)
+          cv.indices.map(j => members.get(j).fold(cv(j))(vs =>
+            VectorMicroMean.finish(vs.foldLeft(VectorMicroMean.zero)(
+              VectorMicroMean.reduce))))
+        }
+        val codes = assign(cv).zipWithIndex.collect {
+          case (j, i) if j >= 0 => Row(rows(is(i)).get(0), sub, seedIds(j))
+        }
+        val cents = cv.indices.map(j => Row(sub, seedIds(j),
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(cv(j))))
+        (codes, cents)
+      }.unzip match { case (codes, cents) => (codes.flatten, cents.flatten) }
+    }
   }
 
   /** Nearest-code assignment per (id, sub): 6-dp-rounded L2 argmin,
@@ -1196,7 +1320,8 @@ object Similarity {
   }
 
   /** A trained PQ index: the encoded corpus `codes` (id, sub, code),
-    * eagerly checkpointed, plus the codebooks `cents` (sub, c_id, cv)
+    * eagerly checkpointed (or a local relation when trained on the
+    * driver), plus the codebooks `cents` (sub, c_id, cv)
     * and the training geometry (`m` subspaces of `dsub` dims) — the
     * FAISS train→add→search lifecycle. At 100 TB the build (3
     * assignment passes over the corpus) amortizes across every batch
@@ -1284,19 +1409,24 @@ object Similarity {
     * every PQ query: subvector explode + `iters`+1 assignment passes).
     * Trajectory is [[pqEncode]]'s exactly — seeds, 6-dp argmin/means,
     * empty-code carry — so an oracle replay stays byte-identical no
-    * matter which search path consumes the index. `codes` is
-    * checkpointed so repeated searches scan n·m skinny rows, never the
-    * source floats. */
+    * matter which search path consumes the index.
+    *
+    * Scale: [[pqCore]]'s two paths. A corpus whose subvector frame
+    * fits `spark.sql.autoBroadcastJoinThreshold` trains on the driver
+    * after one bounded fetch; `codes` and `cents` are local relations
+    * and nothing stays checkpointed. Otherwise the passes run
+    * distributed and `codes` is checkpointed, so repeated searches
+    * scan n·m skinny rows, never the source floats; the index then
+    * holds that checkpoint and the final codebooks' (the subvector
+    * and superseded codebook checkpoints are released). */
   def pqBuild(corpus: DataFrame, m: Int = 8, dsub: Int = 8,
               kCodes: Int = 8, iters: Int = 1,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): PqIndex = {
-    import org.apache.spark.storage.StorageLevel
     val (codes, cents) = pqCore(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
-      m, dsub, kCodes, iters)
-    PqIndex(m, dsub,
-      codes.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER), cents)
+      m, dsub, kCodes, iters, pin = true)
+    PqIndex(m, dsub, codes, cents)
   }
 
   /** Erasure applied to a built flat [[PqIndex]] WITHOUT retraining — the
@@ -1408,9 +1538,16 @@ object Similarity {
                     seenIds: DataFrame,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    val fresh = delta
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .join(seenIds.select(col("id")), Seq("id"), "left_anti")
+    import scala.jdk.CollectionConverters._
+    val vecs = delta.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+    val seen = seenIds.select(col("id"))
+    // a seen-id set within the broadcast threshold is fetched once and
+    // anti-joined as a broadcast local relation, so the plan is fixed
+    // before any stage runs (a shuffled join's final plan follows AQE's
+    // stage timing); a larger one keeps the planner's join
+    val seenSide = Dedup.fetchIfSmall(seen).fold(seen)(rows => broadcast(
+      delta.sparkSession.createDataFrame(rows.toSeq.asJava, seen.schema)))
+    val fresh = vecs.join(seenSide, Seq("id"), "left_anti")
     val resid = residualise(index, fresh) { ivf =>
       // coarse assignment against the FROZEN stored seeds (6-dp cosine
       // argmax, smallest-c_id ties — the ivfAssign convention):
@@ -2593,11 +2730,15 @@ object Similarity {
     * seeds whose residuals cluster near zero and would waste codebook
     * diversity.
     *
-    * Scale: identical to [[pqBuild]] plus one nCentroids-row mean
-    * aggregate (vector_mean partial buffers are all that shuffles)
-    * and a broadcast join of the recentring frame — never a corpus
-    * shuffle; the residual subtraction is one zip_with per row, the
-    * same construction-tier cost class as the subvector slicing. */
+    * Scale: identical to [[pqBuild]] — the residual codebooks train on
+    * the driver when the residual subvector frame fits
+    * `spark.sql.autoBroadcastJoinThreshold` (one bounded fetch, see
+    * [[pqCore]]), else distributed with the codes checkpointed — plus
+    * the checkpointed coarse assignment, one nCentroids-row mean
+    * aggregate (vector_micro_mean partial buffers are all that
+    * shuffles) and a broadcast join of the recentring frame — never a
+    * corpus shuffle; the residual subtraction is one zip_with per row,
+    * the same construction-tier cost class as the subvector slicing. */
   def residualPqBuild(corpus: DataFrame, nCentroids: Int = 16,
                       m: Int = 8, dsub: Int = 8, kCodes: Int = 8,
                       iters: Int = 1,
@@ -2614,9 +2755,8 @@ object Similarity {
       .select(col("centroid_id").as("c_id"), col("mv"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     val (codes, cents) = pqCore(recentre(assigned, recenter), m, dsub,
-      kCodes, iters, seedOffset = nCentroids)
-    PqIndex(m, dsub,
-      codes.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER), cents,
+      kCodes, iters, seedOffset = nCentroids, pin = true)
+    PqIndex(m, dsub, codes, cents,
       // the coarse seed frame rides in the index (nCentroids rows —
       // kilobytes) so serve/add never re-derive seeds from a corpus;
       // norms come from the SAME Spark expression the probe ranking

@@ -21,7 +21,11 @@ import graft.ext.Similarity
   * partitionings (1 partition = one sequential fold vs 7 = many
   * merge orders) and assert the trajectories collide bit-for-bit —
   * so a regression of this class fails `sbt test` instead of
-  * surfacing once per round as a driver-roll flake.
+  * surfacing once per round as a driver-roll flake. The PQ trainings
+  * run on the distributed passes ([[distributed]]): a corpus this
+  * small otherwise trains on the driver, where no partitioning
+  * reaches the trajectory (PqTrainPathsSpec checks that the two paths
+  * agree).
   */
 class TrainDeterminismSpec extends SparkSpec {
   import spark.implicits._
@@ -54,27 +58,31 @@ class TrainDeterminismSpec extends SparkSpec {
   }
 
   test("pqBuild codebooks AND codes are bit-identical across partitionings") {
-    val ia = Similarity.pqBuild(parts(emb, 1), m = 2, dsub = 4, kCodes = 4)
-    val ib = Similarity.pqBuild(parts(emb, 7), m = 2, dsub = 4, kCodes = 4)
-    assert(dump(ia.cents.select(col("sub"), col("c_id"),
-        col("cv").cast("string"))) ===
-      dump(ib.cents.select(col("sub"), col("c_id"),
-        col("cv").cast("string"))))
-    assert(dump(ia.codes) === dump(ib.codes))
+    distributed {
+      val ia = Similarity.pqBuild(parts(emb, 1), m = 2, dsub = 4, kCodes = 4)
+      val ib = Similarity.pqBuild(parts(emb, 7), m = 2, dsub = 4, kCodes = 4)
+      assert(dump(ia.cents.select(col("sub"), col("c_id"),
+          col("cv").cast("string"))) ===
+        dump(ib.cents.select(col("sub"), col("c_id"),
+          col("cv").cast("string"))))
+      assert(dump(ia.codes) === dump(ib.codes))
+    }
   }
 
   test("residualPqBuild recenter means and codebooks are bit-identical") {
-    val ia = Similarity.residualPqBuild(parts(emb, 1), nCentroids = 4,
-      m = 2, dsub = 4, kCodes = 4)
-    val ib = Similarity.residualPqBuild(parts(emb, 7), nCentroids = 4,
-      m = 2, dsub = 4, kCodes = 4)
-    assert(dump(ia.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))) ===
-      dump(ib.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))))
-    assert(dump(ia.cents.select(col("sub"), col("c_id"),
-        col("cv").cast("string"))) ===
-      dump(ib.cents.select(col("sub"), col("c_id"),
-        col("cv").cast("string"))))
-    assert(dump(ia.codes) === dump(ib.codes))
+    distributed {
+      val ia = Similarity.residualPqBuild(parts(emb, 1), nCentroids = 4,
+        m = 2, dsub = 4, kCodes = 4)
+      val ib = Similarity.residualPqBuild(parts(emb, 7), nCentroids = 4,
+        m = 2, dsub = 4, kCodes = 4)
+      assert(dump(ia.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))) ===
+        dump(ib.ivf.get.recenter.select(col("c_id"), col("mv").cast("string"))))
+      assert(dump(ia.cents.select(col("sub"), col("c_id"),
+          col("cv").cast("string"))) ===
+        dump(ib.cents.select(col("sub"), col("c_id"),
+          col("cv").cast("string"))))
+      assert(dump(ia.codes) === dump(ib.codes))
+    }
   }
 
   test("drift/retrain gate rows replay identically run-over-run") {
@@ -92,7 +100,7 @@ class TrainDeterminismSpec extends SparkSpec {
       val benefit = Similarity.pqRetrainBenefitStats(grown, retrained, src)
       dump(drift) ++ dump(benefit)
     }
-    assert(gateRows(parts(emb, 1)) === gateRows(parts(emb, 7)))
+    distributed(assert(gateRows(parts(emb, 1)) === gateRows(parts(emb, 7))))
   }
 
   test("ivfAssign cell assignment is bit-identical across partitionings") {

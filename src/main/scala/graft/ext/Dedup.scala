@@ -404,19 +404,22 @@ object Dedup {
     * (the loops here, PQ training in `Similarity.pqCore`, the seen-id
     * guard of `Similarity.pqEncodeFresh`). Small means at most the
     * session's `spark.sql.autoBroadcastJoinThreshold` (the size it
-    * already agrees to ship whole to every task) in rows of `df`'s
-    * schema; a threshold ≤ 0 disables the local finish,
+    * already agrees to ship whole to every task) in rows of
+    * `rowBytes`, by default the schema's `defaultSize` (a caller whose
+    * rows hold arrays passes their real width, as Spark counts an
+    * array as one element); a threshold ≤ 0 disables the local finish,
     * exactly as it disables broadcast. One bounded fetch both decides
     * and fetches, so the large path pays only that read. The fetch is
     * one task reading the partitions in order until it passes the
     * bound (a plain `take` scans one partition first and then the
     * rest, two jobs where one does); rows already on the driver (a
     * local relation) are read without a job. */
-  private[graft] def fetchIfSmall(df: DataFrame): Option[Array[Row]] = {
+  private[graft] def fetchIfSmall(df: DataFrame,
+                                  rowBytes: Option[Long] = None): Option[Array[Row]] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val bytes = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val bound = math.min(bytes / math.max(1, df.schema.defaultSize),
-      Int.MaxValue - 1L).toInt
+    val width = rowBytes.getOrElse(df.schema.defaultSize.toLong)
+    val bound = math.min(bytes / math.max(1L, width), Int.MaxValue - 1L).toInt
     lazy val source = df.queryExecution.optimizedPlan match {
       case _: LocalRelation => df
       case _ => df.coalesce(1)

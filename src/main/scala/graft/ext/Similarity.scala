@@ -1116,8 +1116,8 @@ object Similarity {
     *
     * Scale: one bounded fetch of the (id, sub, sv) subvector frame
     * decides the path ([[Dedup.fetchIfSmall]]: at most
-    * `spark.sql.autoBroadcastJoinThreshold` bytes in rows of that
-    * schema, ≤ 0 disables it). When it fits, [[pqTrainLocal]] trains
+    * `spark.sql.autoBroadcastJoinThreshold` bytes at 12 + 8·dsub bytes
+    * a row, ≤ 0 disables it). When it fits, [[pqTrainLocal]] trains
     * and encodes on the driver and both frames come back as local
     * relations — the two-phase finish of Kiveris et al. (SoCC 2014),
     * which spares a small corpus the ~12 jobs of the distributed
@@ -1158,7 +1158,9 @@ object Similarity {
     }
     def encode(subs: DataFrame, cents: DataFrame) = pqAssignCore(subs, cents)
       .select(col("id"), col("sub"), col("best.c_id").as("code"))
-    Dedup.fetchIfSmall(exploded)
+    // a row holds a long id, an int sub and dsub doubles (Spark's
+    // defaultSize would count the array as one element)
+    Dedup.fetchIfSmall(exploded, Some(12L + 8L * dsub))
       .flatMap(pqTrainLocal(_, k, iters, seedOffset)) match {
       case Some((codes, cents)) =>
         // the distributed frames' schemas, read off their unexecuted plans
@@ -1196,16 +1198,11 @@ object Similarity {
     * evaluation order, so the rows equal the distributed path's.
     * Returns the (id, sub, code) and (sub, c_id, cv) rows, or None for
     * input the replay does not cover: ids that are null, repeated or
-    * neither long nor int, and subvectors that are null, hold a null
-    * or differ in length within a subspace. */
+    * not long, and subvectors that are null, hold a null or differ in
+    * length within a subspace. */
   private def pqTrainLocal(rows: Array[Row], k: Int, iters: Int,
                            seedOffset: Int): Option[(Seq[Row], Seq[Row])] = {
     import graft.functions.{Round6, VectorMicroMean}
-    def key(id: Any): Option[Long] = id match {
-      case l: java.lang.Long => Some(l.longValue)
-      case i: java.lang.Integer => Some(i.longValue)
-      case _ => None
-    }
     def dotp(a: Array[Double], b: Array[Double]): Double = {
       val n = math.min(a.length, b.length)
       var s = 0.0
@@ -1216,9 +1213,9 @@ object Similarity {
     // SQLOrderingUtil.compareDoubles: -0.0 = 0.0, NaN above everything
     def less(x: Double, y: Double): Boolean =
       x != y && java.lang.Double.compare(x, y) < 0
-    val covered = rows.forall(r => key(r.get(0)).isDefined &&
+    val covered = rows.forall(r => r.get(0).isInstanceOf[java.lang.Long] &&
       !r.isNullAt(2) && !r.getSeq[Any](2).contains(null))
-    lazy val ids = rows.map(r => key(r.get(0)).get)
+    lazy val ids = rows.map(_.getLong(0))
     lazy val sortedIds = ids.distinct.sorted
     lazy val bySub = rows.indices.groupBy(rows(_).getInt(1)).toSeq.sortBy(_._1)
     lazy val svs = bySub.map { case (_, is) =>
@@ -1229,9 +1226,7 @@ object Similarity {
       sortedIds.length * bySub.length == rows.length &&
       svs.forall(_.map(_.length).distinct.length <= 1)
     Option.when(exact) {
-      val seedKeys = sortedIds.slice(seedOffset, seedOffset + k)
-      val idOf = rows.indices.map(i => ids(i) -> rows(i).get(0)).toMap
-      val seedIds = seedKeys.map(idOf)
+      val seedIds = sortedIds.slice(seedOffset, seedOffset + k)
       bySub.zip(svs).map { case ((sub, is), sv) =>
         val pos = is.indices.map(p => ids(is(p)) -> p).toMap
         val svv = sv.map(a => dotp(a, a))
@@ -1247,7 +1242,7 @@ object Similarity {
             best
           }
         }
-        val seedCv = seedKeys.toIndexedSeq.map(s => sv(pos(s)))
+        val seedCv = seedIds.toIndexedSeq.map(s => sv(pos(s)))
         val cv = (0 until iters).foldLeft(seedCv) { (cv, _) =>
           val members = assign(cv).zip(sv).groupMap(_._1)(_._2)
           cv.indices.map(j => members.get(j).fold(cv(j))(vs =>
@@ -1255,7 +1250,7 @@ object Similarity {
               VectorMicroMean.reduce))))
         }
         val codes = assign(cv).zipWithIndex.collect {
-          case (j, i) if j >= 0 => Row(rows(is(i)).get(0), sub, seedIds(j))
+          case (j, i) if j >= 0 => Row(ids(is(i)), sub, seedIds(j))
         }
         val cents = cv.indices.map(j => Row(sub, seedIds(j),
           scala.collection.immutable.ArraySeq.unsafeWrapArray(cv(j))))

@@ -88,6 +88,38 @@ class PqTrainPathsSpec extends SparkSpec {
       kCodes = 4, iters = 0))
   }
 
+  test("input the driver replay does not cover trains distributed: " +
+      "a repeated id, a null vector, a null element, ragged vectors") {
+    val corpora = Seq(
+      "repeated id" -> hostile.unionAll(hostile.filter(col("vec_id") === 5L)),
+      "null vector" -> hostile.unionAll(Seq((100L, null: Array[Float]))
+        .toDF("vec_id", "embedding")),
+      "null element" -> hostile.unionAll(
+        Seq((100L, Array[java.lang.Float](0.5f, null, 0.25f, 0.1f,
+          0.2f, 0.3f, 0.4f, 0.6f))).toDF("vec_id", "embedding")),
+      "ragged" -> hostile.unionAll(Seq((100L, Array(0.5f, 0.25f, 0.1f)))
+        .toDF("vec_id", "embedding")))
+    corpora.foreach { case (name, e) =>
+      val (l, d) = onBothPaths {
+        val codes = Similarity.pqEncode(e, 2, 4, 4, 1)
+        val ix = Similarity.pqBuild(e, m = 2, dsub = 4, kCodes = 4, iters = 1)
+        (rows(codes), codes.schema, contents(ix), trainedLocally(ix.codes))
+      }
+      assert(!l._4, s"$name: trained on the driver")
+      assert(l === d, name)
+    }
+  }
+
+  test("the fetch bound counts every double of a subvector") {
+    // 48 one-subvector rows of 8 doubles: 48 × (12 + 8·8) = 3,648
+    // bytes, where Spark's defaultSize (an array as one element) would
+    // count 48 × 20 = 960
+    def local(bytes: Long) = withBroadcastThreshold(bytes)(trainedLocally(
+      Similarity.pqBuild(hostile, m = 1, dsub = 8, kCodes = 4).codes))
+    assert(!local(3647L))
+    assert(local(3648L))
+  }
+
   test("residualPqBuild: both training paths give the same codes, " +
       "codebooks, recentring means and schemas") {
     assertSamePaths(Similarity.residualPqBuild(emb, nCentroids = 16,

@@ -13,10 +13,14 @@ trait SparkSpec extends AnyFunSuite {
     * turns off the driver-side finish of the iterative operators along
     * with broadcast joins (forcing their distributed loops), then
     * restores the setting. */
-  def distributed[A](f: => A): A = {
+  def distributed[A](f: => A): A = withBroadcastThreshold(-1L)(f)
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`,
+    * then restores the setting. */
+  def withBroadcastThreshold[A](bytes: Long)(f: => A): A = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val old = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, bytes.toString)
     try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 

@@ -68,84 +68,48 @@ object SparkEntry {
     * build — so without sharing, one Bench/Verify session pays the ~4 s
     * chain three times. The memo hands every consumer in a session one
     * eagerly-checkpointed (doc_id, component) frame (node-cardinality —
-    * tiny relative to the edge set). Keyed on (session, dir): a new
-    * session or a different scale factor recomputes; entries die with
-    * the process (Bench/Verify are one-shot mains). */
-  private val componentsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedComponents(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    componentsMemo.computeIfAbsent((s, d), _ =>
-      Dedup.components(sharedDupPairs(s, d)).localCheckpoint(true))
-  }
+    * tiny relative to the edge set). */
+  private[graft] val sharedComponents = new SessionMemo[DataFrame]((s, d) =>
+    Dedup.components(sharedDupPairs(s, d)).localCheckpoint(true))
 
-  /** The q43 candidate-pair frame (capped co-shingle pairs) memoised
-    * per (session, dir) — the shared input of the component labelling
-    * and the pair-level consumers (q255 flow matrix, q260 density
-    * audit). In a deployment the candidate pairs are a materialized
-    * stage output every downstream audit reads; re-generating postings
-    * per consumer would pay the pipeline's most expensive text scan
-    * three times. */
-  private val dupPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedDupPairs(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    dupPairsMemo.computeIfAbsent((s, d), _ =>
-      Dedup.coShinglePairs(documents(s, d), minShared = 2,
-        maxPostings = 1000).localCheckpoint(true))
-  }
+  /** The q43 candidate-pair frame (capped co-shingle pairs) — the
+    * shared input of the component labelling and the pair-level
+    * consumers (q255 flow matrix, q260 density audit). In a deployment
+    * the candidate pairs are a materialized stage output every
+    * downstream audit reads; re-generating postings per consumer would
+    * pay the pipeline's most expensive text scan three times. */
+  private val sharedDupPairs = new SessionMemo[DataFrame]((s, d) =>
+    Dedup.coShinglePairs(documents(s, d), minShared = 2,
+      maxPostings = 1000).localCheckpoint(true))
 
   /** The measured near-dup threshold sweep shared by q247 (the curve)
     * and q261 (the operating-point advisor over it) — the
-    * [[sharedQuantLadder]] pattern on the dedup dial; the trailing
-    * limit makes the ≤|thresholds| bound provable to the advisor's
-    * unpartitioned-window plan gate. */
-  private val nearDupSweepMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedNearDupSweep(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    nearDupSweepMemo.computeIfAbsent((s, d), _ => {
-      val emb = embeddings(s, d)
-      Similarity.nearDupThresholdSweep(emb,
-          thresholdsMicro = Seq(200000L, 250000L, 300000L, 350000L, 400000L),
-          nCentroids = Similarity.autoCentroids(emb.count()))
-        .localCheckpoint(true).limit(100)
-    })
-  }
+    * [[sharedQuantLadder]] pattern on the dedup dial. */
+  private val sharedNearDupSweep = new SessionMemo[DataFrame]((s, d) => {
+    val emb = embeddings(s, d)
+    Similarity.nearDupThresholdSweep(emb,
+      thresholdsMicro = Seq(200000L, 250000L, 300000L, 350000L, 400000L),
+      nCentroids = Similarity.autoCentroids(emb.count()))
+  })
 
   /** The measured quality-retention sweep shared by q252 (the curve)
     * and q272 (the operating-point advisor over it) — the
-    * [[sharedNearDupSweep]] pattern on the quality dial; the trailing
-    * limit makes the ≤|thresholds| bound provable to the advisor's
-    * unpartitioned-window plan gate. */
-  private val qualitySweepMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedQualitySweep(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    qualitySweepMemo.computeIfAbsent((s, d), _ =>
-      T.qualityThresholdSweep(documents(s, d),
-          thresholdsMicro = Seq(50000L, 100000L, 200000L, 300000L,
-            400000L))
-        .localCheckpoint(true).limit(100))
-  }
+    * [[sharedNearDupSweep]] pattern on the quality dial. */
+  private val sharedQualitySweep = new SessionMemo[DataFrame]((s, d) =>
+    T.qualityThresholdSweep(documents(s, d),
+      thresholdsMicro = Seq(50000L, 100000L, 200000L, 300000L, 400000L)))
 
   /** The measured LSH band sweep shared by q215 (the curve) and q273
     * (the bands advisor over it) — same memo pattern; the sweep's
     * signature pass is the session's most expensive text stage after
     * the shingle chain, and the advisor must never pay it twice. */
-  private val lshSweepMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedLshSweep(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    lshSweepMemo.computeIfAbsent((s, d), _ => {
-      val docs = documents(s, d).filter(
-        pmod(T.md5Hash60(col("doc_id").cast("string")), lit(2)) === 0)
-      Dedup.lshBandSweep(docs, threshold = 0.5, k = 64,
-          bandsList = Seq(4, 8, 16), maxPostings = 1000,
-          scheme = Dedup.OracleHash)
-        .localCheckpoint(true).limit(100)
-    })
-  }
+  private val sharedLshSweep = new SessionMemo[DataFrame]((s, d) => {
+    val docs = documents(s, d).filter(
+      pmod(T.md5Hash60(col("doc_id").cast("string")), lit(2)) === 0)
+    Dedup.lshBandSweep(docs, threshold = 0.5, k = 64,
+      bandsList = Seq(4, 8, 16), maxPostings = 1000,
+      scheme = Dedup.OracleHash)
+  })
 
   /** The trained-and-applied BPE encoding shared by q80 (the per-doc
     * table), q85 (per-lang fertility), q278 (per-source fertility) and
@@ -154,46 +118,18 @@ object SparkEntry {
     * the shingle chain, and four consumers must not pay it four times.
     * The memo holds the SYMBOL-level frame (id, n_tokens, syms); count
     * consumers project it through [[graft.ext.TextAnalysis.bpeCounts]]. */
-  private val bpeEncodedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedBpeSyms(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    bpeEncodedMemo.computeIfAbsent((s, d), _ => {
-      val docs = documents(s, d)
-      T.bpeEncodeSymbols(docs, T.bpeMerges(docs, iters = 3), iters = 3)
-        .localCheckpoint(true)
-    })
-  }
+  private val sharedBpeSyms = new SessionMemo[DataFrame]((s, d) => {
+    val docs = documents(s, d)
+    T.bpeEncodeSymbols(docs, T.bpeMerges(docs, iters = 3), iters = 3)
+      .localCheckpoint(true)
+  })
   private def sharedBpeEncoded(s: SparkSession, d: String): DataFrame =
     T.bpeCounts(sharedBpeSyms(s, d))
 
-  /** Memo hygiene (ADVICE r10): the static memo maps hold SparkSession
-    * and checkpointed-DataFrame references, which a long-lived JVM that
-    * cycles sessions would retain forever. The first memo insert per
-    * session registers ONE listener that drops that session's entries
-    * when its application ends (Bench/Verify are one-shot mains, so
-    * this is belt-and-braces for library embedders). */
-  private val evictionHooked =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]()
-  private def hookEviction(s: SparkSession): Unit =
-    if (evictionHooked.putIfAbsent(s, java.lang.Boolean.TRUE) == null)
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictSession(s)
-      })
-
-  /** Drops every memo entry of session `s`. */
-  private[graft] def evictSession(s: SparkSession): Unit = {
-    Seq[java.util.concurrent.ConcurrentHashMap[(SparkSession, String), _]](
-      componentsMemo, dupPairsMemo, nearDupSweepMemo, qualitySweepMemo,
-      lshSweepMemo, bpeEncodedMemo, oldLabelsMemo, pqIndexMemo,
-      ivfPqIndexMemo, grownPqIndexMemo, grownIvfPqIndexMemo,
-      quantLadderMemo, assetSigsMemo)
-      .foreach(_.keySet.removeIf(k => k._1 eq s))
-    evictionHooked.remove(s)
-    ()
-  }
+  /** Drops every memo entry of session `s` and releases its
+    * checkpoints ([[SessionMemo.evict]]). */
+  private[graft] def evictSession(s: SparkSession): Unit =
+    SessionMemo.evict(s)
 
   /** q135's "previous crawl" labelling: components over the old-batch
     * (id % 7 ≠ 0) corpus. In a real incremental deployment this is
@@ -201,19 +137,24 @@ object SparkEntry {
     * recomputed per query — the 10× probe put the rebuild at ~60% of
     * q135's wall-clock (258 s of pair-gen alone on the dup-dense
     * replicated corpus), all of it cost the incremental path exists
-    * to NOT pay. Memoised per (session, dir) like [[sharedComponents]]
-    * so q135's per-query timing reflects the incremental work that is
-    * its actual deployment cost; the rebuild runs once in warmup. */
-  private val oldLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def q135OldLabels(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    oldLabelsMemo.computeIfAbsent((s, d), _ =>
-      Dedup.components(Dedup.coShinglePairs(
-          documents(s, d).filter(pmod(col("doc_id"), lit(7)) =!= 0),
-          minShared = 2, maxPostings = 1000))
-        .localCheckpoint(true))
-  }
+    * to NOT pay. Memoised like [[sharedComponents]] so q135's
+    * per-query timing reflects the incremental work that is its
+    * actual deployment cost; the rebuild runs once in warmup. */
+  private val q135OldLabels = new SessionMemo[DataFrame]((s, d) =>
+    Dedup.components(Dedup.coShinglePairs(
+        documents(s, d).filter(pmod(col("doc_id"), lit(7)) =!= 0),
+        minShared = 2, maxPostings = 1000))
+      .localCheckpoint(true))
+
+  /** The q305 variant-store phash signature frame: ONE 61-cell grid
+    * pass feeds the pair (q305), histogram (q306) and cross-modal
+    * (q307) consumers — in a deployment the signature frame is a
+    * materialized stage output every store consumer reads, not
+    * something recomputed per query. `phashSigs` checkpoints eagerly,
+    * matching the memo contract. */
+  private val sharedAssetSigs = new SessionMemo[DataFrame]((s, d) =>
+    Multimodal.phashSigs(Multimodal.assets(
+      Multimodal.withReencodedVariants(documents(s, d)))))
 
   /** One trained PQ index per (session, dir): q177/q178/q185/q186 all
     * search the SAME 16-subspace × 32-code index over `embeddings` —
@@ -221,63 +162,31 @@ object SparkEntry {
     * ([[ext.Similarity.pqBuild]]). Without sharing, each of the four
     * queries replays the build (subvector explode + two assignment
     * passes — the dominant cost at eval corpus sizes; the round-10 30×
-    * probes put training at most of q185/q186's wall-clock). Keyed
-    * like [[componentsMemo]]; warmed by [[warmShared]] so per-query
-    * bench timings reflect each query's own search tail, with the
-    * build amortized exactly as in a real deployment (one build
-    * serves every query batch). Determinism is unchanged: the build
-    * trajectory is byte-identical to the per-query replay the oracles
-    * run. */
-  private val pqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  /** The q305 variant-store phash signature frame memoised per
-    * (session, dir): ONE 61-cell grid pass feeds the pair (q305),
-    * histogram (q306) and cross-modal (q307) consumers — in a
-    * deployment the signature frame is a materialized stage output
-    * every store consumer reads, not something recomputed per query.
-    * `phashSigs` checkpoints eagerly, matching the memo contract. */
-  private val assetSigsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedAssetSigs(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    assetSigsMemo.computeIfAbsent((s, d), _ =>
-      Multimodal.phashSigs(Multimodal.assets(
-        Multimodal.withReencodedVariants(documents(s, d)))))
-  }
-
-  private[graft] def sharedPqIndex(s: SparkSession, d: String): Similarity.PqIndex = {
-    hookEviction(s)
-    pqIndexMemo.computeIfAbsent((s, d), _ =>
-      Similarity.pqBuild(embeddings(s, d), m = 16, dsub = 4,
-        kCodes = 32, iters = 1))
-  }
+    * probes put training at most of q185/q186's wall-clock). Warmed by
+    * [[warmShared]] so per-query bench timings reflect each query's
+    * own search tail, with the build amortized exactly as in a real
+    * deployment (one build serves every query batch). Determinism is
+    * unchanged: the build trajectory is byte-identical to the
+    * per-query replay the oracles run. */
+  private[graft] val sharedPqIndex = new SessionMemo[Similarity.PqIndex]((s, d) =>
+    Similarity.pqBuild(embeddings(s, d), m = 16, dsub = 4,
+      kCodes = 32, iters = 1))
 
   /** One IVF (residual-encoded) index per (session, dir) —
     * q189/q190 share it exactly as q177/q178/q185/q186 share
     * [[sharedPqIndex]]; SAME coarse geometry (16 cells) and code budget
     * (16 × 32) as the shared flat index so q190's uplift comparison is
     * equal-budget by construction. */
-  private val ivfPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private[graft] def sharedIvfPqIndex(s: SparkSession,
-                                      d: String): Similarity.PqIndex = {
-    hookEviction(s)
-    ivfPqIndexMemo.computeIfAbsent((s, d), _ =>
-      Similarity.residualPqBuild(embeddings(s, d), nCentroids = 16,
-        m = 16, dsub = 4, kCodes = 32, iters = 1))
-  }
+  private[graft] val sharedIvfPqIndex = new SessionMemo[Similarity.PqIndex]((s, d) =>
+    Similarity.residualPqBuild(embeddings(s, d), nCentroids = 16,
+      m = 16, dsub = 4, kCodes = 32, iters = 1))
 
   /** The q198/q199 GROWN index: codebooks trained on the 80% base
     * (vec_id % 5 ≠ 0), the 20% delta added with frozen codebooks —
     * built once per (session, dir), like the other index memos. */
-  private val grownPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private[graft] def sharedGrownPqIndex(s: SparkSession,
-                                        d: String): Similarity.PqIndex = {
-    hookEviction(s)
-    grownPqIndexMemo.computeIfAbsent((s, d), _ => grownIndex(s, d)(
+  private[graft] val sharedGrownPqIndex = new SessionMemo[Similarity.PqIndex]((s, d) =>
+    grownIndex(s, d)(
       Similarity.pqBuild(_, m = 16, dsub = 4, kCodes = 32, iters = 1)))
-  }
 
   /** An index `build` trains on the 80% base (vec_id % 5 ≠ 0), grown
     * by the 20% delta with frozen quantizers. */
@@ -295,15 +204,10 @@ object SparkEntry {
     * coarse-assigns to the frozen seeds, recentres on the frozen
     * means and encodes against the frozen codebooks. Built once per
     * (session, dir), like the other index memos. */
-  private val grownIvfPqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private[graft] def sharedGrownIvfPqIndex(s: SparkSession,
-                                           d: String): Similarity.PqIndex = {
-    hookEviction(s)
-    grownIvfPqIndexMemo.computeIfAbsent((s, d), _ => grownIndex(s, d)(
+  private[graft] val sharedGrownIvfPqIndex = new SessionMemo[Similarity.PqIndex]((s, d) =>
+    grownIndex(s, d)(
       Similarity.residualPqBuild(_, nCentroids = 16, m = 16, dsub = 4,
         kCodes = 32, iters = 1)))
-  }
 
   /** The MEASURED quantization ladder shared by q225 (the tuning
     * table itself) and q239 (the tier advisor deciding over it) —
@@ -311,23 +215,13 @@ object SparkEntry {
     * each at sf0.1). In a deployment the ladder is a measured
     * artifact the advisor READS, not something re-derived per
     * decision, so it memoises per (session, dir) like the index
-    * artifacts; localCheckpoint pins the ≤5-row frame so the second
-    * consumer costs arithmetic only. */
-  private val quantLadderMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sharedQuantLadder(s: SparkSession, d: String): DataFrame = {
-    hookEviction(s)
-    quantLadderMemo.computeIfAbsent((s, d), _ => {
-      val emb = embeddings(s, d)
-      // limit(100) after the checkpoint: a semantic no-op on the
-      // ≤5-row ladder that makes the bound PROVABLE (maxRows) — the
-      // checkpointed leaf is otherwise opaque to the advisor's
-      // unpartitioned-window plan gate (the spearman limit pattern)
-      Similarity.quantLadderStats(sharedPqIndex(s, d), emb,
-        emb.filter(col("vec_id") < 10), k = 5)
-        .localCheckpoint(true).limit(100)
-    })
-  }
+    * artifacts; its ≤5 rows come back as a local relation, so the
+    * second consumer costs arithmetic only. */
+  private val sharedQuantLadder = new SessionMemo[DataFrame]((s, d) => {
+    val emb = embeddings(s, d)
+    Similarity.quantLadderStats(sharedPqIndex(s, d), emb,
+      emb.filter(col("vec_id") < 10), k = 5)
+  })
 
   /** Eagerly builds the shared component labelling for `d` (no-op when
     * already memoised). Bench calls this during warmup so the first

@@ -12,6 +12,9 @@ import org.apache.spark.sql.functions.{expr, timestamp_micros}
   * deliberately do not replicate that inefficiency).
   */
 object Tables {
+  private val spreadFloor = 8
+  private val spreadTargetBytes = 16L << 20
+
   /** r16/r17 optimization — scale-adaptive scan parallelism (guide
     * §2.5 "input skew: one huge unsplittable file … repartition
     * immediately after the read", §6 input split sizing, §2.2 "fewer,
@@ -30,14 +33,13 @@ object Tables {
     *   target = min(defaultParallelism,
     *                max(spreadFloor, sizeInBytes / spreadTargetBytes))
     *
-    * — spread a below-parallelism scan by bytes (one task per
-    * `spark.graft.spread.targetPartitionBytes`, default 16 MB), but
-    * never below `spark.graft.spread.floor` (default 8) tasks, because
-    * CPU-per-byte can dwarf bytes for shingle/hash/vector kernels over
-    * small inputs. At deployment scale the scan already has ≥ cores
-    * partitions and the branch is a no-op; a single large file spreads
-    * by bytes; only tiny inputs hit the floor — the case the measured
-    * optimum (8-way at sf0.1, grid in OPTIMIZATION_r17.md) pins.
+    * — spread a below-parallelism scan by bytes (one task per 16 MB),
+    * but never below 8 tasks, because CPU-per-byte can dwarf bytes for
+    * shingle/hash/vector kernels over small inputs. At deployment
+    * scale the scan already has ≥ cores partitions and the branch is
+    * a no-op; a single large file spreads by bytes; only tiny inputs
+    * hit the floor — the case the measured optimum (8-way at sf0.1,
+    * grid in OPTIMIZATION_r17.md) pins.
     * Aggregation results are partition-count-invariant by the
     * library's integer-quantization conventions (the CPU-varied
     * forensics gate re-checks at round close). The repartition sits
@@ -55,26 +57,13 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val raw = spark.read.parquet(s"$sfDir/$name.parquet")
     val dp = spark.sparkContext.defaultParallelism
-    val floor = spreadConf(spark, "spark.graft.spread.floor", 8L)
-    val tgtBytes =
-      spreadConf(spark, "spark.graft.spread.targetPartitionBytes", 16L << 20)
     val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
     val byBytes =
-      (bytes / tgtBytes).min(BigInt(Int.MaxValue)).toInt
-    val target = math.min(dp, math.max(floor, byBytes)).toInt
+      (bytes / spreadTargetBytes).min(BigInt(Int.MaxValue)).toInt
+    val target = math.min(dp, math.max(spreadFloor, byBytes))
     if (raw.queryExecution.toRdd.getNumPartitions < target)
       raw.repartition(target)
     else raw
-  }
-
-  /** A spread conf: a positive integer, else an IllegalArgumentException
-    * naming the key (a 0 target would divide by zero at every load). */
-  private def spreadConf(spark: SparkSession, key: String,
-                         default: Long): Long = {
-    val raw = spark.conf.get(key, default.toString)
-    raw.trim.toLongOption.filter(_ >= 1L).getOrElse(
-      throw new IllegalArgumentException(
-        s"$key must be a positive integer, got '$raw'"))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

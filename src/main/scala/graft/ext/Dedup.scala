@@ -433,13 +433,28 @@ object Dedup {
     * ContextCleaner to notice them on a GC. Every RDD leaf of each
     * plan is unpersisted, so pass only frames that read nothing but
     * checkpoints the caller owns. */
-  private[graft] def release(dfs: DataFrame*): Unit = dfs.foreach(
-    _.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-        ()
-      case _ => ()
-    })
+  private[graft] def release(dfs: DataFrame*): Unit =
+    dfs.flatMap(rddLeaves).foreach(_.unpersist(blocking = false))
+
+  /** The rows of `df`, a result of a few rows, as a local relation,
+    * with the checkpoints `df` read released: every RDD leaf of its
+    * plan that no frame of `inputs` reads, so the caller's inputs keep
+    * theirs. The local finish of an operator that checkpoints its
+    * working set and returns a small table: consumers read the rows
+    * without a job, and the plan gates see their count (`maxRows`). */
+  private[graft] def finishLocal(df: DataFrame, inputs: DataFrame*): DataFrame = {
+    val local = df.sparkSession.createDataFrame(df.collect().toSeq.asJava,
+      df.schema)
+    val kept = inputs.flatMap(rddLeaves).map(_.id).toSet
+    rddLeaves(df).filterNot(r => kept(r.id))
+      .foreach(_.unpersist(blocking = false))
+    local
+  }
+
+  private def rddLeaves(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
 
   // ===== exact n-gram Jaccard ==============================================
 
@@ -875,7 +890,9 @@ object Dedup {
     * pairs, and one conditional-count aggregate, exploded back to one
     * row per setting. The mask keeps every count exact per setting
     * without leaning on the nesting, so a finite `maxBucketSize` stays
-    * correct; at most 63 settings.
+    * correct; at most 63 settings. The per-setting rows come back as
+    * a local relation and the pinned frames are released
+    * ([[finishLocal]]).
     * `maxBucketSize` bounds the bucket join's per-bucket blowup exactly
     * as in [[minhashPairs]] — the default Int.MaxValue keeps the strict
     * nesting theorem (`recall_monotone_ok` pins it) but makes the
@@ -940,11 +957,11 @@ object Dedup {
           "n_common * 1000000 div n_candidate END")
           .as("precision_micro"))
     val w = Window.orderBy(col("bands"))
-    sweep.withColumn("recall_monotone_ok",
+    finishLocal(sweep.withColumn("recall_monotone_ok",
         (coalesce(col("recall_micro"), lit(0L)) >=
           coalesce(lag(col("recall_micro"), 1).over(w), lit(0L)))
           .cast("long"))
-      .orderBy(col("bands"))
+      .orderBy(col("bands")), docs)
   }
 
   /** Operating-point advisor over a measured [[lshBandSweep]] frame —

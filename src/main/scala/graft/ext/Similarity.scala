@@ -1342,6 +1342,10 @@ object Similarity {
     private[graft] def ids: DataFrame =
       ivf.fold(codes.filter(col("sub") === 0))(_.cells).select(col("id"))
 
+    /** Every frame the index holds. */
+    private[graft] def frames: Seq[DataFrame] = Seq(codes, cents) ++
+      ivf.toSeq.flatMap(i => Seq(i.coarse, i.recenter, i.cells))
+
     /** This index plus `fresh` rows in the [[pqEncodeFresh]] shape, as
       * lazy unions: their codes, and an IVF index's cell assignments
       * (the sub = 0 slice). */
@@ -1659,7 +1663,10 @@ object Similarity {
     * Scale: an EVAL operator — the yardstick and each tier scan run
     * on the query sample; the exact top-k is computed once and pinned
     * (four consumers). The kCodes derivation counts the codebook
-    * frame (m·k rows — kilobytes, the broadcast model). */
+    * frame (m·k rows — kilobytes, the broadcast model). The tier rows
+    * come back as a local relation, and the frames pinned along the
+    * way (the yardstick, the SQ and binary corpora) are released; the
+    * index's frames stay ([[Dedup.finishLocal]]). */
   def quantLadderStats(index: PqIndex, corpus: DataFrame,
                        queries: DataFrame, k: Int,
                        idCol: String = "vec_id",
@@ -1674,7 +1681,7 @@ object Similarity {
       recallStats(exact, approx, k)
         .select(lit(name).as("tier"), lit(compX).as("compression_x"),
           col("n_q"), col("sum_hits"), col("mean_recall_micro"))
-    Seq(
+    val ladder = Seq(
       tier("raw_float32", 1L, exact),
       tier("sq8_int8", 4L, sq8TopK(corpus, queries, k, idCol, vecCol)),
       tier("sq4_int4", 8L, sq4TopK(corpus, queries, k, idCol, vecCol)),
@@ -1683,6 +1690,7 @@ object Similarity {
       tier("bq_1bit", 32L, bqTopK(corpus, queries, k, idCol, vecCol)))
       .reduce(_.unionAll(_))
       .orderBy(col("compression_x"), col("tier"))
+    Dedup.finishLocal(ladder, index.frames ++ Seq(corpus, queries): _*)
   }
 
   /** Storage-tier advisor over a measured [[quantLadderStats]] frame —
@@ -1831,7 +1839,9 @@ object Similarity {
     *
     * Scale: ONE blocked pair pass ([[ivfAssign]] equi-join, never
     * corpus²), pinned; each operating point is a filter + two
-    * contractions over the skinny pair frame. */
+    * contractions over the skinny pair frame. The points come back as
+    * a local relation and the pinned frames are released
+    * ([[Dedup.finishLocal]]). */
   def nearDupThresholdSweep(emb: DataFrame, thresholdsMicro: Seq[Long],
                             nCentroids: Int = 16, nAssign: Int = 2,
                             idCol: String = "vec_id",
@@ -1853,6 +1863,7 @@ object Similarity {
         floor(round(sim, 6) * 1e6 + lit(0.5)).cast("long").as("s"))
       .distinct()
       .localCheckpoint(true)
+    Dedup.release(assigned)
     val points = thresholdsMicro.map { t =>
       val surv = pairs.filter(col("s") >= t)
       val np = surv.agg(count(lit(1)).as("n_pairs"))
@@ -1865,7 +1876,7 @@ object Similarity {
     // the nesting check runs over the |thresholds|-row union of
     // aggregates — bounded by construction
     val w = Window.orderBy(col("threshold_micro"))
-    points
+    val sweep = points
       // BOTH columns the scaladoc claims non-increasing are pinned:
       // pairs nest (a pair at t survives every t' < t) and so do the
       // affected-doc sets — a flag on n_pairs alone would not trip on
@@ -1877,6 +1888,7 @@ object Similarity {
            coalesce(lag(col("n_docs_affected"), 1).over(w),
              col("n_docs_affected")))).cast("long"))
       .orderBy(col("threshold_micro"))
+    Dedup.finishLocal(sweep, emb)
   }
 
   /** Vector-norm health histogram — the pre-index sanity gate every

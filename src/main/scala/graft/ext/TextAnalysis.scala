@@ -450,9 +450,11 @@ object TextAnalysis {
     * after that runs over the VOCABULARY (checkpointed per iteration so
     * the plan stays linear in `iters`, the q66 lesson), and the elected
     * pair joins back as a broadcast single row — the q8 leaderboard
-    * pattern, no driver-side collect. That matches how BPE training
-    * actually distributes: pair counting is the parallel part, the
-    * merge election is vocab-sized.
+    * pattern, no driver-side collect inside the loop. That matches how
+    * BPE training actually distributes: pair counting is the parallel
+    * part, the merge election is vocab-sized. The `iters` merge rows
+    * come back as a local relation, and the vocabulary checkpoints
+    * are released ([[Dedup.finishLocal]]).
     *
     * Merge application uses non-overlapping left-to-right string
     * replace of " l r " — back-to-back occurrences ("a b a b") leave
@@ -470,10 +472,10 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .select(col("word"), col("wc"), spacedChars(col("word")).as("syms"))
       .localCheckpoint()
-    var vocab = words
+    var vocabs = Seq(words)
     var merges = Seq.empty[DataFrame]
     (1 to iters).foreach { it =>
-      val counts = vocab
+      val counts = vocabs.last
         .select(col("wc"), explode(adjacentPairs(col("syms"))).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("wc")).as("cnt"))
@@ -482,7 +484,7 @@ object TextAnalysis {
         .localCheckpoint()
       merges = merges :+ best.select(lit(it.toLong).as("iter"), col("l"),
         col("r"), concat(col("l"), col("r")).as("merged"), col("cnt"))
-      vocab = vocab.crossJoin(broadcast(best.select(
+      vocabs :+= vocabs.last.crossJoin(broadcast(best.select(
           col("l").as("_l"), col("r").as("_r"))))
         .select(col("word"), col("wc"),
           replace(col("syms"),
@@ -490,7 +492,10 @@ object TextAnalysis {
             concat(lit(" "), col("_l"), col("_r"), lit(" "))).as("syms"))
         .localCheckpoint()
     }
-    merges.reduce(_ union _).orderBy(col("iter"))
+    val out = Dedup.finishLocal(
+      merges.reduce(_ union _).orderBy(col("iter")), df)
+    Dedup.release(vocabs: _*)
+    out
   }
 
   /** DSIR-style importance weights (Xie et al. 2023, "Data Selection
@@ -666,9 +671,11 @@ object TextAnalysis {
     * score's VALUES can be trusted, this says what each cutoff keeps;
     * together they price a threshold). One [[withQuality]] pass,
     * pinned; each point is arithmetic over the skinny (q10k,
-    * n_tokens) frame. Emits (threshold_micro, n_survivors,
-    * survivor_share_micro, tokens_retained, token_share_micro)
-    * ascending — both counts non-increasing by construction. */
+    * n_tokens) frame, and the points come back as a local relation
+    * with the pinned frame released. Emits (threshold_micro,
+    * n_survivors, survivor_share_micro, tokens_retained,
+    * token_share_micro) ascending — both counts non-increasing by
+    * construction. */
   def qualityThresholdSweep(df: DataFrame, thresholdsMicro: Seq[Long],
                             textCol: String = "text"): DataFrame = {
     require(thresholdsMicro.nonEmpty &&
@@ -681,7 +688,7 @@ object TextAnalysis {
       .localCheckpoint(true)
     val totals = scored.agg(count(lit(1)).as("_n"),
       sum(col("n_tokens")).as("_t"))
-    thresholdsMicro.map { t =>
+    val sweep = thresholdsMicro.map { t =>
       scored.filter(col("qm") >= t)
         .agg(count(lit(1)).as("n_survivors"),
           coalesce(sum(col("n_tokens")), lit(0L)).as("tokens_retained"))
@@ -693,6 +700,7 @@ object TextAnalysis {
           expr("tokens_retained * 1000000 div greatest(_t, 1)")
             .as("token_share_micro"))
     }.reduce(_.unionAll(_)).orderBy(col("threshold_micro"))
+    Dedup.finishLocal(sweep, df)
   }
 
   /** Operating-point advisor over a measured [[qualityThresholdSweep]]

@@ -45,18 +45,6 @@ object Sinks {
       .option("header", "true")
       .csv(fileUri(out))
 
-  /** S9: rows → JSON records on a Kafka topic (`to_json(struct(*))` as
-    * the message value) — the engine-side form of the reference's
-    * producer. Requires the spark-sql-kafka connector at runtime
-    * (absent in this offline environment — config-only here; the
-    * record shaping itself is `gen.EventJson`, which is tested). */
-  def kafkaJson(df: DataFrame, bootstrapServers: String, topic: String): Unit =
-    df.selectExpr("to_json(struct(*)) AS value")
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .save()
-
   /** Bucketed managed table: pre-shuffles once at write time so every
     * subsequent equi-join/aggregation on `bucketCol` between tables
     * bucketed the same way runs with NO exchange — the co-located-join

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ext.Dedup
@@ -119,12 +119,4 @@ object CurationStream {
         processBatch(storePath, outPath)(batch, batchId)
       }
       .option("checkpointLocation", checkpointPath)
-
-  /** Drain-the-backlog deployment: run everything available, then stop
-    * (the scheduled-ingest mode; state carries over via the store). */
-  def sinkCuratedAvailableNow(docs: DataFrame, storePath: String,
-                              outPath: String,
-                              checkpointPath: String): DataStreamWriter[Row] =
-    sinkCurated(docs, storePath, outPath, checkpointPath)
-      .trigger(Trigger.AvailableNow())
 }

@@ -26,39 +26,30 @@ class EntrySpec extends SparkSpec {
 
   test("evictSession empties every memo map of the session") {
     import java.lang.reflect.ParameterizedType
-    import java.util.concurrent.ConcurrentHashMap
-    import org.apache.spark.sql.SparkSession
+    val fields = SparkEntry.getClass.getDeclaredFields.toSeq
+    // a memo written by hand, as a map keyed by the session, fails here
+    val handMaps = fields.filter { f =>
+      (classOf[java.util.Map[_, _]].isAssignableFrom(f.getType) ||
+        classOf[scala.collection.Map[_, _]].isAssignableFrom(f.getType)) &&
+      (f.getGenericType match {
+        case p: ParameterizedType =>
+          p.getActualTypeArguments.head.getTypeName
+            .contains(classOf[org.apache.spark.sql.SparkSession].getName)
+        case _ => false
+      })
+    }
+    assert(handMaps.isEmpty, s"session-keyed maps: ${handMaps.map(_.getName)}")
+    val memos = fields
+      .filter(f => classOf[SessionMemo[_]].isAssignableFrom(f.getType))
+      .map { f => f.setAccessible(true); f.get(SparkEntry).asInstanceOf[SessionMemo[_]] }
+    assert(memos.size === 13)
+    assert(SessionMemo.registered.size === 13)
+    assert(memos.forall(m => SessionMemo.registered.exists(_ eq m)))
     val s = spark.newSession()
-    val maps = SparkEntry.getClass.getDeclaredFields.toSeq
-      .filter(f => classOf[ConcurrentHashMap[_, _]].isAssignableFrom(f.getType))
-      .map { f =>
-        f.setAccessible(true)
-        val key = f.getGenericType.asInstanceOf[ParameterizedType]
-          .getActualTypeArguments.head
-        (f.getName, key, f.get(SparkEntry).asInstanceOf[ConcurrentHashMap[Any, Any]])
-      }
-    def keyedBy(m: ConcurrentHashMap[Any, Any]): Boolean =
-      m.keySet.stream.anyMatch {
-        case k: Product => k.productElement(0).asInstanceOf[AnyRef] eq s
-        case k => k.asInstanceOf[AnyRef] eq s
-      }
-    // one memo filled for real, then every session-keyed map by hand,
-    // so a memo added later without eviction fails here
     SparkEntry.queries("q215_lsh_band_sweep")(s, dir).collect()
-    maps.foreach {
-      case (_, p: ParameterizedType, m)
-          if p.getActualTypeArguments.head == classOf[SparkSession] =>
-        m.putIfAbsent((s, "evict-spec"), java.lang.Boolean.TRUE)
-      case (_, k, m) if k == classOf[SparkSession] =>
-        m.putIfAbsent(s, java.lang.Boolean.TRUE)
-      case _ => ()
-    }
-    val filled = maps.filter(x => keyedBy(x._3)).map(_._1)
-    assert(filled.size >= 14, s"session-keyed maps found: $filled")
+    assert(SessionMemo.registered.exists(_.holds(s)))
     SparkEntry.evictSession(s)
-    maps.foreach { case (name, _, m) =>
-      assert(!keyedBy(m), s"$name still holds the evicted session")
-    }
+    assert(!SessionMemo.registered.exists(_.holds(s)))
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>

@@ -68,42 +68,9 @@ class TablesSpec extends SparkSpec {
     val dir = fixture(
       StructField("ts", TimestampType, false),
       (1L to 64L).map(i => Row(i, new Timestamp(epochMicros / 1000L))))
-    // tiny file → byBytes = 0 → floor (default 8) clamped to dp (4)
+    // tiny file → byBytes = 0 → floor (8) clamped to dp (4)
     assert(Tables.table(spark, dir, "events")
       .rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
-    // a floor below dp is honored as-is for a tiny input
-    spark.conf.set("spark.graft.spread.floor", "2")
-    try assert(Tables.table(spark, dir, "events")
-      .rdd.getNumPartitions === 2)
-    finally spark.conf.unset("spark.graft.spread.floor")
-  }
-
-  test("spread confs are validated: target bytes > 0, floor >= 1, " +
-      "the error names the key") {
-    val dir = fixture(
-      StructField("ts", TimestampType, false),
-      Seq(Row(1L, new Timestamp(epochMicros / 1000L))))
-    for ((key, bad) <- Seq(
-        "spark.graft.spread.targetPartitionBytes" -> "0",
-        "spark.graft.spread.targetPartitionBytes" -> "-5",
-        "spark.graft.spread.floor" -> "0",
-        "spark.graft.spread.floor" -> "-1",
-        "spark.graft.spread.floor" -> "eight")) {
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          Tables.table(spark, dir, "events"))
-        assert(e.getMessage.contains(key), s"$key=$bad")
-      } finally spark.conf.unset(key)
-    }
-    // the smallest valid values load
-    spark.conf.set("spark.graft.spread.targetPartitionBytes", "1")
-    spark.conf.set("spark.graft.spread.floor", "1")
-    try assert(Tables.table(spark, dir, "events").count() === 1L)
-    finally {
-      spark.conf.unset("spark.graft.spread.targetPartitionBytes")
-      spark.conf.unset("spark.graft.spread.floor")
-    }
   }
 
   test("events: an unexpected ts type fails loudly, naming the type") {

@@ -22,8 +22,9 @@ import graft.ext.{Dedup, Similarity}
   * A memo registers itself when it is constructed, so
   * [[SessionMemo.evict]] reaches every memo there is. The first hit of
   * a session adds one listener that drops the session's entries when
-  * its application ends, so a long-lived JVM that cycles sessions does
-  * not keep their sessions and frames alive. */
+  * its application ends, and [[SessionMemo.evict]] removes it again,
+  * so a long-lived JVM that cycles sessions keeps neither their frames
+  * nor, through a listener, the sessions themselves alive. */
 private[graft] final class SessionMemo[A](build: (SparkSession, String) => A) {
   private val entries = new ConcurrentHashMap[(SparkSession, String), A]()
   SessionMemo.registry.add(this)
@@ -45,32 +46,44 @@ private[graft] final class SessionMemo[A](build: (SparkSession, String) => A) {
 
 private[graft] object SessionMemo {
   private val registry = new CopyOnWriteArrayList[SessionMemo[_]]()
-  private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
+  private val hooked = new ConcurrentHashMap[SparkSession, SparkListener]()
 
   /** Every memo constructed so far. */
   private[graft] def registered: Seq[SessionMemo[_]] = registry.asScala.toSeq
 
+  /** The eviction listener of each session that has one. */
+  private[graft] def listeners: Map[SparkSession, SparkListener] =
+    hooked.asScala.toMap
+
   /** The listener only drops entries: the stopping context frees its
-    * own blocks, so nothing is unpersisted during shutdown. */
-  private def hookEviction(s: SparkSession): Unit =
-    if (hooked.add(s))
-      s.sparkContext.addSparkListener(new SparkListener {
+    * own blocks and listeners, so nothing is unpersisted or removed
+    * during shutdown. */
+  private def hookEviction(s: SparkSession): Unit = {
+    hooked.computeIfAbsent(s, _ => {
+      val l = new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          hooked.remove(s)
           dropAll(s); ()
         }
-      })
-
-  private def dropAll(s: SparkSession): Seq[Any] = {
-    hooked.remove(s)
-    registered.flatMap(_.drop(s))
+      }
+      s.sparkContext.addSparkListener(l)
+      l
+    })
+    ()
   }
 
-  /** Drops every memo entry of session `s` and releases the checkpoints
-    * the entries hold: a frame's, or a PQ index's codes, codebooks and
-    * coarse quantizer. */
-  def evict(s: SparkSession): Unit = dropAll(s).foreach {
-    case df: Dataset[_] => Dedup.release(df.toDF())
-    case ix: Similarity.PqIndex => Dedup.release(ix.frames: _*)
-    case _ => ()
+  private def dropAll(s: SparkSession): Seq[Any] =
+    registered.flatMap(_.drop(s))
+
+  /** Drops every memo entry of session `s`, releases the checkpoints
+    * the entries hold (a frame's, or a PQ index's codes, codebooks and
+    * coarse quantizer) and removes the session's listener. */
+  def evict(s: SparkSession): Unit = {
+    Option(hooked.remove(s)).foreach(s.sparkContext.removeSparkListener)
+    dropAll(s).foreach {
+      case df: Dataset[_] => Dedup.release(df.toDF())
+      case ix: Similarity.PqIndex => Dedup.release(ix.frames: _*)
+      case _ => ()
+    }
   }
 }

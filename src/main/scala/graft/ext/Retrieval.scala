@@ -354,22 +354,16 @@ object Retrieval {
       .withColumn(s"${id}_n", Sim.norm(col(s"${id}_v")))
     val c = parts(corpus, "cid")
     val q = parts(queries, "qid")
-    val denom = col("qid_n") * col("cid_n")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(Sim.dot(col("qid_v"), col("cid_v")) / denom)
+    val sim = Sim.cosine(col("qid_v"), col("cid_v"), col("qid_n"), col("cid_n"))
     val simMicro = floor(round(sim, 6) * 1e6 + lit(0.5)).cast("long")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("maxsim_micro").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
+    Sim.topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), col("qid_part"),
         simMicro.as("sim_micro"))
       .groupBy(col("qid"), col("cid"), col("qid_part"))
       .agg(max(col("sim_micro")).as("part_max"))
       .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("part_max")).as("maxsim_micro"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+      .agg(sum(col("part_max")).as("maxsim_micro")),
+      k, col("maxsim_micro").desc)
   }
 
   /** Spearman rank correlation between two top-N rankings — the

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`) — extension
@@ -72,10 +73,51 @@ object Similarity {
         / (sqrt(na.cast("double")) * sqrt(nb.cast("double"))))
 
   /** Cosine similarity of two double arrays; 0.0 when either norm is 0. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d === 0.0, 0.0).otherwise(dot(a, b) / d)
+  def cosine(a: Column, b: Column): Column = cosine(a, b, norm(a), norm(b))
+
+  /** Cosine over precomputed norms, `dot(a, b) / (na·nb)`, and 0.0 when
+    * either norm is 0 — the one cosine every search and blocked pair
+    * pass in this library scores with. Unrounded: callers round at
+    * their own precision (6 dp for rank keys, 4 dp for near-dup pairs),
+    * so ties and thresholds replay in the oracle's double arithmetic. */
+  private[ext] def cosine(a: Column, b: Column, na: Column,
+                          nb: Column): Column = {
+    val denom = na * nb
+    when(denom === 0.0, 0.0).otherwise(dot(a, b) / denom)
   }
+
+  /** The per-query top-k tail of every search: `row_number` over `qid`
+    * ordered by `by`, then the smaller `cid`, keeping rank ≤ k, ordered
+    * by (qid, rank). Scores are 6-dp-rounded cosines or exact integers,
+    * so ties are common and the `cid` tie-break is what makes the
+    * result a total order both engines reproduce. */
+  private[ext] def topKPerQuery(scored: DataFrame, k: Int,
+                                by: Column = col("cos_sim").desc): DataFrame =
+    scored
+      .withColumn("rank",
+        row_number().over(Window.partitionBy(col("qid")).orderBy(by, col("cid"))))
+      .filter(col("rank") <= k)
+      .orderBy(col("qid"), col("rank"))
+
+  /** One side of a cosine scan: `df`'s ids as `id`, its vectors as
+    * array<double> through `shape` as `v`, their norms as `n`. */
+  private def normed(df: DataFrame, idCol: String, vecCol: String,
+                     id: String, v: String, n: String,
+                     shape: Column => Column = identity): DataFrame =
+    df.select(col(idCol).as(id), shape(asDouble(col(vecCol))).as(v))
+      .withColumn(n, norm(col(v)))
+
+  /** The exact scan of [[bruteTopK]], [[prefixTopK]], the scalar-
+    * quantized scans and [[shardedTopK]]: every prepared corpus row
+    * (cid, cv, cn) against the broadcast prepared queries (qid, qv, qn),
+    * self pairs excluded, so the corpus is read once whatever the query
+    * count. Emits (qid, cid, `keep`…, cos_sim) with cos_sim the 6-dp
+    * [[cosine]]. */
+  private def exactScan(c: DataFrame, q: DataFrame, keep: Column*): DataFrame =
+    c.join(broadcast(q), col("qid") =!= col("cid"))
+      .select(Seq(col("qid"), col("cid")) ++ keep :+
+        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
+          .as("cos_sim"): _*)
 
   /** All pairs with cosine ≥ threshold. Exact self-join (O(n²) pairs):
     * the yardstick for the LSH variant — at corpus scale, bucket first.
@@ -84,11 +126,8 @@ object Similarity {
   def nearDupPairs(emb: DataFrame, threshold: Double,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val e = normed(emb, idCol, vecCol, "id", "v", "nrm")
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
         round(sim, 4).as("cos_sim"))
@@ -96,30 +135,14 @@ object Similarity {
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Exact top-k nearest (cosine) corpus vectors per query vector.
-    * The query set is broadcast, so the corpus is scanned exactly once
-    * regardless of query count; ranking is windowed per query. Ties are
-    * broken on (rounded sim, id) so results are total-ordered and
-    * oracle-stable. */
+  /** Exact top-k nearest (cosine) corpus vectors per query vector: the
+    * [[exactScan]] ranked by [[topKPerQuery]] — the correctness
+    * baseline every approximate search is measured against. */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = corpus.select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), round(sim, 6).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
-  }
+                vecCol: String = "embedding"): DataFrame =
+    topKPerQuery(exactScan(normed(corpus, idCol, vecCol, "cid", "cv", "cn"),
+      normed(queries, idCol, vecCol, "qid", "qv", "qn")), k)
 
   /** [[bruteTopK]] with EXACT integer rank keys ([[microVec]] +
     * [[pinnedCosine]]) — the de-floated yardstick for gates whose
@@ -134,21 +157,16 @@ object Similarity {
   def pinnedBruteTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus.select(col(idCol).as("cid"), microVec(col(vecCol)).as("cv"))
       .withColumn("cna", dotLong(col("cv"), col("cv")))
     val q = queries.select(col(idCol).as("qid"), microVec(col(vecCol)).as("qv"))
       .withColumn("qna", dotLong(col("qv"), col("qv")))
     val sim = pinnedCosine(dotLong(col("qv"), col("cv")),
       col("qna"), col("cna"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("_psim").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), sim.as("_psim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"), sim.as("_psim")),
+      k, col("_psim").desc)
       .select(col("qid"), col("cid"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
   }
 
   /** Pinned-integer IVF cell assignment — the de-floated blocking
@@ -164,7 +182,6 @@ object Similarity {
   def pinnedCellAssign(emb: DataFrame, nCentroids: Int = 16,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val seeds = emb.orderBy(col(idCol)).limit(nCentroids)
       .select(col(idCol).as("c_id"), microVec(col(vecCol)).as("cv"))
       .withColumn("cna", dotLong(col("cv"), col("cv")))
@@ -207,7 +224,6 @@ object Similarity {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
                         langCol: String = "lang"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val v = emb.select(col(idCol).as("id"), microVec(col(vecCol)).as("pv"))
       .withColumn("na", dotLong(col("pv"), col("pv")))
     val cells = pinnedCellAssign(emb, nCentroids, idCol, vecCol)
@@ -243,10 +259,9 @@ object Similarity {
   /** Matryoshka-style prefix-dimension first stage (Kusupati et al.
     * NeurIPS'22 — MRL-trained embeddings order information by
     * dimension, so the first `prefixDims` dims are a usable coarse
-    * representation): exact top-k by cosine over the PREFIX ONLY.
-    * Same conventions as [[bruteTopK]] (broadcast queries, 6-dp
-    * rounding, ties on cid); emits (qid, cid, cos_sim, rank) where
-    * cos_sim is the PREFIX cosine.
+    * representation): exact top-k by cosine over the PREFIX ONLY —
+    * [[bruteTopK]] with both sides cut to the prefix; emits (qid, cid,
+    * cos_sim, rank) where cos_sim is the PREFIX cosine.
     *
     * Scale: the scan reads prefixDims/dims of the float payload (with
     * column pruning to a stored prefix column, proportionally less
@@ -257,24 +272,11 @@ object Similarity {
                  prefixDims: Int,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(prefixDims >= 1, "prefixDims must be >= 1")
-    val c = corpus.select(col(idCol).as("cid"),
-        slice(asDouble(col(vecCol)), 1, prefixDims).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val q = queries.select(col(idCol).as("qid"),
-        slice(asDouble(col(vecCol)), 1, prefixDims).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), round(sim, 6).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    val prefix = (v: Column) => slice(v, 1, prefixDims)
+    topKPerQuery(exactScan(
+      normed(corpus, idCol, vecCol, "cid", "cv", "cn", prefix),
+      normed(queries, idCol, vecCol, "qid", "qv", "qn", prefix)), k)
   }
 
   /** Prefix first stage at depth `r`, exact full-dimension refine to
@@ -360,7 +362,6 @@ object Similarity {
   def quantizationErrorStats(emb: DataFrame,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.ext.{TextAnalysis => T}
     val dims = emb.select(col(idCol).as("id"),
       posexplode(asDouble(col(vecCol))).as(Seq("d", "x")))
@@ -551,13 +552,8 @@ object Similarity {
       .select(col("id"), col("v"), col("nrm"), col("centroid_id"))
   }
 
-  /** Per-query probe selection shared by [[ivfTopK]] and
-    * [[ivfPqSearch]] — rank the nCentroids smallest-id seed centroids
-    * per query by 6-dp-rounded cosine (the ivfAssign reproducibility
-    * convention: probe choice must replay bit-for-bit in the
-    * cross-engine oracle; ties on c_id) and keep nProbe. ONE shared
-    * body so a rounding/tie change can never desynchronize the exact
-    * and compressed scans. Returns (qid, qv, qn, centroid_id). */
+  /** Per-query probe selection of every IVF search: [[ivfProbesFrom]]
+    * over the nCentroids smallest-id seed centroids. */
   private def ivfProbes(corpus: DataFrame, queries: DataFrame,
                         nCentroids: Int, nProbe: Int,
                         idCol: String, vecCol: String): DataFrame =
@@ -568,33 +564,49 @@ object Similarity {
     * (c_id, cv, cn). */
   private def seedCentroids(corpus: DataFrame, nCentroids: Int,
                             idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
+    normed(corpus, idCol, vecCol, "c_id", "cv", "cn")
       .orderBy(col("c_id")).limit(nCentroids)
 
-  /** [[ivfProbes]] over a PREPARED centroid frame (c_id, cv, cn) —
-    * the form a self-contained index artifact uses: the coarse seeds
-    * ride in the index instead of being re-derived from a corpus
-    * (which, for a grown index, would elect DIFFERENT seeds and break
-    * the frozen-quantizer contract). Same 6-dp/tie conventions. */
+  /** The probes of each query over a PREPARED centroid frame (c_id,
+    * cv, cn): centroids ranked by 6-dp [[cosine]], ties to the smaller
+    * c_id, first nProbe kept — probe choice replays bit-for-bit in the
+    * oracle. A self-contained index passes its stored coarse seeds
+    * (re-deriving them from a grown corpus would elect DIFFERENT seeds
+    * and break the frozen-quantizer contract). Returns (qid, qv, qn,
+    * centroid_id, _crk), `_crk` the probe's rank. */
   private def ivfProbesFrom(centroids: DataFrame, queries: DataFrame,
                             nProbe: Int,
                             idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val cdenom = col("qn") * col("cn")
-    val csim = when(cdenom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / cdenom)
+    val csim = cosine(col("qv"), col("cv"), col("qn"), col("cn"))
+    // ranks centroids per query, not candidates: not a top-k tail
     val cw = Window.partitionBy(col("qid"))
       .orderBy(col("_csim").desc, col("c_id"))
-    q.join(broadcast(centroids), lit(true))
+    normed(queries, idCol, vecCol, "qid", "qv", "qn")
+      .join(broadcast(centroids), lit(true))
       .withColumn("_csim", round(csim, 6))
       .withColumn("_crk", row_number().over(cw))
       .filter(col("_crk") <= nProbe)
       .select(col("qid"), col("qv"), col("qn"),
-        col("c_id").as("centroid_id"))
+        col("c_id").as("centroid_id"), col("_crk"))
   }
+
+  /** Exact 6-dp [[cosine]] of each query against the members of its
+    * probed lists: `members` (id, v, nrm, `list`) joined on `list` to
+    * the broadcast `probes` (qid, qv, qn, `list`), self pairs dropped.
+    * Emits (qid, cid, cos_sim, `keep`…). */
+  private def probedScores(members: DataFrame, probes: DataFrame,
+                           list: String, keep: Column*): DataFrame =
+    members.join(broadcast(probes), Seq(list))
+      .filter(col("qid") =!= col("id"))
+      .select(Seq(col("qid"), col("id").as("cid"),
+        round(cosine(col("qv"), col("v"), col("qn"), col("nrm")), 6)
+          .as("cos_sim")) ++ keep: _*)
+
+  /** The re-rank of every IVF search: [[probedScores]] ranked by
+    * [[topKPerQuery]]. */
+  private def ivfRerank(members: DataFrame, probes: DataFrame,
+                        list: String, k: Int): DataFrame =
+    topKPerQuery(probedScores(members, probes, list), k)
 
   /** Two-level IVF assignment — the beyond-the-driver-cap path the
     * [[ivfAssign]] scaladoc documents (past [[MaxCentroids]] lists,
@@ -623,7 +635,6 @@ object Similarity {
   def ivfAssign2(emb: DataFrame, n1: Int, n2: Int,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
     require(n2 > 0, "n2 must be positive")
     // consumed twice (seed election + assignment) — materialize once
@@ -635,9 +646,7 @@ object Similarity {
       .filter(col("_rk") <= n2)
       .select(col("cell1"), col("id").as("s_id"), col("v").as("sv"),
         col("nrm").as("sn"))
-    val denom = col("nrm") * col("sn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("v"), col("sv")) / denom)
+    val sim = cosine(col("v"), col("sv"), col("nrm"), col("sn"))
     l1.join(seeds2, Seq("cell1"))
       .select(col("id"), col("v"), col("nrm"), col("cell1"), col("s_id"),
         round(sim, 6).as("_s"))
@@ -661,7 +670,6 @@ object Similarity {
                n1: Int = 8, n2: Int = 4, p1: Int = 3, p2: Int = 2,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
     val l1 = ivfAssign(corpus, n1, 1, idCol, vecCol)
       .withColumnRenamed("centroid_id", "cell1")
@@ -673,9 +681,7 @@ object Similarity {
         col("nrm").as("sn"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     // corpus-side level-2 assignment (map-side-collapsed argmax)
-    val sden = col("nrm") * col("sn")
-    val ssim = when(sden === 0.0, 0.0)
-      .otherwise(dot(col("v"), col("sv")) / sden)
+    val ssim = cosine(col("v"), col("sv"), col("nrm"), col("sn"))
     val assigned2 = l1.join(seeds2, Seq("cell1"))
       .select(col("id"), col("cell1"), col("s_id"), round(ssim, 6).as("_s"))
       .groupBy(col("id"))
@@ -686,9 +692,8 @@ object Similarity {
     // query-side probes: p1 level-1 cells, then p2 lists per cell
     val probes1 = ivfProbes(corpus, queries, n1, p1, idCol, vecCol)
       .withColumnRenamed("centroid_id", "cell1")
-    val qden = col("qn") * col("sn")
-    val qsim = when(qden === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("sv")) / qden)
+    val qsim = cosine(col("qv"), col("sv"), col("qn"), col("sn"))
+    // ranks level-2 seeds per probed cell, not candidates
     val w2 = Window.partitionBy(col("qid"), col("cell1"))
       .orderBy(col("_qs").desc, col("s_id"))
     val probes2 = probes1.join(seeds2, Seq("cell1"))
@@ -696,18 +701,7 @@ object Similarity {
       .withColumn("_qrk", row_number().over(w2))
       .filter(col("_qrk") <= p2)
       .select(col("qid"), col("qv"), col("qn"), col("s_id").as("cell2"))
-    // exact re-rank of the probed lists' members
-    val denom = col("qn") * col("nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("v")) / denom)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    assigned2.join(broadcast(probes2), Seq("cell2"))
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("cid"), round(sim, 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    ivfRerank(assigned2, probes2, "cell2", k)
   }
 
   /** IVF approximate top-k: rank centroids per query, probe the
@@ -718,23 +712,10 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
               idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val assigned = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
-    val probes = ivfProbes(corpus, queries, nCentroids, nProbe,
-      idCol, vecCol)
-    // candidates = vectors in probed buckets; exact re-rank
-    val denom = col("qn") * col("nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("v")) / denom)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("cid"))
-    assigned.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("cid"), round(sim, 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
-  }
+              vecCol: String = "embedding"): DataFrame =
+    ivfRerank(ivfAssign(corpus, nCentroids, 1, idCol, vecCol),
+      ivfProbes(corpus, queries, nCentroids, nProbe, idCol, vecCol),
+      "centroid_id", k)
 
   /** IVF-blocked near-dup pairs: the 100 TB form of `nearDupPairs` —
     * pairs are only checked inside a centroid bucket, so the join is an
@@ -754,9 +735,7 @@ object Similarity {
     // lineage truncation keeps the centroid broadcast out of the join plan
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     assigned.as("a").join(assigned.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.id") < col("b.id"))
@@ -783,9 +762,7 @@ object Similarity {
                      vecCol: String = "embedding"): DataFrame = {
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     assigned.as("a").join(assigned.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.id") =!= col("b.id"))
@@ -822,9 +799,7 @@ object Similarity {
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .join(labels, col("id") === col("lid")).drop("lid")
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     val cands = assigned.as("a").join(assigned.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.id") =!= col("b.id") && col("a.lbl") =!= col("b.lbl"))
@@ -839,7 +814,6 @@ object Similarity {
     // exchange" carries more bytes than these two row-level exchanges,
     // which sort-spill gracefully (probed at 100k vectors; no win,
     // with OOM exposure the row form doesn't have).
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id"))
       .orderBy(col("neg_sim").desc, col("neg_id"))
     cands.distinct()
@@ -867,9 +841,7 @@ object Similarity {
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .join(flags, col("id") === col("fid")).drop("fid")
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     val best = assigned.filter(!col("is_probe")).as("a")
       .join(assigned.filter(col("is_probe")).as("b"),
         col("a.centroid_id") === col("b.centroid_id"))
@@ -902,28 +874,19 @@ object Similarity {
               idCol: String = "vec_id",
               vecCol: String = "embedding",
               scheme: Dedup.HashScheme = Dedup.FastHash): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def sigs(df: DataFrame, id: String, v: String, n: String) = df
-      .select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
-      .withColumn(n, norm(col(v)))
-      .join(srpSignatures(df, bits, tables, idCol, vecCol, scheme)
-        .withColumnRenamed("id", id), Seq(id))
+    def sigs(df: DataFrame, id: String, v: String, n: String) =
+      normed(df, idCol, vecCol, id, v, n)
+        .join(srpSignatures(df, bits, tables, idCol, vecCol, scheme)
+          .withColumnRenamed("id", id), Seq(id))
     val c = sigs(corpus, "cid", "cv", "cn")
     val q = sigs(queries, "qid", "qv", "qn")
     val cand = c.join(broadcast(q), Seq("tbl", "sig"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("qv"), col("qn"), col("cid"), col("cv"), col("cn"))
       .dropDuplicates("qid", "cid")
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val scored = cand.select(col("qid"), col("cid"),
-      round(sim, 6).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    topKPerQuery(cand.select(col("qid"), col("cid"),
+      round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
+        .as("cos_sim")), k)
   }
 
   /** Corpus isotropy diagnostic: the distribution of cosine similarity
@@ -947,13 +910,10 @@ object Similarity {
   def pairCosineHistogram(emb: DataFrame, offset: Long = 17,
                           bins: Int = 20, idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb, idCol, vecCol, "id", "v", "nrm")
     val b = e.select((col("id") - offset).as("id"), col("v").as("bv"),
       col("nrm").as("bn"))
-    val denom = col("nrm") * col("bn")
-    val cos = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("v"), col("bv")) / denom)
+    val cos = cosine(col("v"), col("bv"), col("nrm"), col("bn"))
     val pairs = e.join(b, Seq("id"))
       .select(round(cos * 1e6).cast("long").as("cos_micro"))
     graft.ops.Aggregations.equiWidthHistogram(pairs, "cos_micro", bins)
@@ -1057,9 +1017,7 @@ object Similarity {
           col("v"), col("nrm"), ids, cvs, cns, 1), 1).as("cluster"),
         col("v"), col("nrm"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val pd = col("a.nrm") * col("b.nrm")
-    val psim = when(pd === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / pd)
+    val psim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     // a vector is dropped iff some LOWER-id cluster-mate sits above tau
     val dropped = assigned.as("a").join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
@@ -1299,9 +1257,8 @@ object Similarity {
     * `floor(x·1e6 + 0.5)` BEFORE any arithmetic (bit-identical across
     * engines; a 6-dp `round` here flipped boundary values downstream
     * of differently-accumulated norms), so the per-pair m-term sum is
-    * order-free. ONE shared body so a quantization change can never
-    * desynchronize the flat and blocked scans. The HOF runs
-    * interpreted, but only over the n_q·m·k LUT rows (kilobytes).
+    * order-free. The HOF runs interpreted, but only over the n_q·m·k
+    * LUT rows (kilobytes).
     * Returns (qid, sub, c_id, dm). */
   private def pqLut(queries: DataFrame, cents: DataFrame,
                     m: Int, dsub: Int,
@@ -1552,9 +1509,7 @@ object Similarity {
       // argmax, smallest-c_id ties — the ivfAssign convention):
       // broadcast nCentroids rows, map-side-collapsed argmax (the
       // ivfAssign2 join-side shape — no driver model needed for an add)
-      val denom = col("nrm") * col("cn")
-      val sim = when(denom === 0.0, 0.0)
-        .otherwise(dot(col("v"), col("cv")) / denom)
+      val sim = cosine(col("v"), col("cv"), col("nrm"), col("cn"))
       fresh.withColumn("nrm", norm(col("v")))
         .join(broadcast(ivf.coarse.select(col("c_id"), col("cv"),
           col("cn"))), lit(true))
@@ -1709,7 +1664,6 @@ object Similarity {
     * query samples by design. */
   def indexTierAdvisor(ladder: DataFrame,
                        targetRecallMicro: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the ladder is an aggregate-contracted frame (≤ a few rows), so
     // the unpartitioned windows here never see corpus cardinality
     val ok = (col("mean_recall_micro") >= targetRecallMicro).cast("long")
@@ -1806,7 +1760,6 @@ object Similarity {
   def knnLabelVoteStatsFromKnn(knn: DataFrame, labeled: DataFrame,
                                idCol: String = "vec_id",
                                labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val labels = labeled.select(col(idCol).as("_lid"),
       col(labelCol).cast("long").as("_lbl"))
     val votes = knn.join(labels, col("nid") === col("_lid"))
@@ -1846,16 +1799,13 @@ object Similarity {
                             nCentroids: Int = 16, nAssign: Int = 2,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(thresholdsMicro.nonEmpty &&
       thresholdsMicro == thresholdsMicro.sorted &&
       thresholdsMicro.distinct == thresholdsMicro,
       "thresholdsMicro must be distinct and ascending")
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     val pairs = assigned.as("a").join(assigned.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.id") < col("b.id"))
@@ -1913,7 +1863,6 @@ object Similarity {
   def vectorNormHealthStats(emb: DataFrame,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val na = dotLong(microVec(col(vecCol)), microVec(col(vecCol)))
     val bucketed = emb
       .select(na.as("na"))
@@ -1949,7 +1898,6 @@ object Similarity {
     * measurement cost lives in the sweep. */
   def nearDupThresholdAdvisor(sweep: DataFrame,
                               maxPairsBudget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ok = (col("n_pairs") <= maxPairsBudget).cast("long")
     // qualifying points rank by threshold ASC; non-qualifying by
     // n_pairs ASC (closest to budget first), threshold as tie-break
@@ -2001,7 +1949,6 @@ object Similarity {
     * occurrence aggregate consume it. */
   def hubnessStatsFromKnn(knn: DataFrame, topN: Int = 10,
                           idCol: String = "vec_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // total slots IN-PLAN (1-row broadcast scalar attach, the
     // pqRetrainBenefitStats pattern) rather than an eager knn.count()
     // at composition time: the eager count ran the expensive blocked
@@ -2093,7 +2040,6 @@ object Similarity {
                    maxShareMicro: Long = 100000L,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val assigned = ivfAssign(emb, nCentroids, 1, idCol, vecCol)
       .localCheckpoint(true)
     val counts = assigned.groupBy(col("centroid_id"))
@@ -2109,9 +2055,7 @@ object Similarity {
       .filter(col("_srk") <= 2)
       .select(col("centroid_id"), col("id").as("seed_id"),
         col("v").as("sv"), col("nrm").as("sn"))
-    val denom = col("nrm") * col("sn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("v"), col("sv")) / denom)
+    val sim = cosine(col("v"), col("sv"), col("nrm"), col("sn"))
     val wAssign = Window.partitionBy(col("id"))
       .orderBy(col("_s").desc, col("seed_id"))
     val splitMembers = assigned.join(hot, Seq("centroid_id"), "left_semi")
@@ -2208,7 +2152,6 @@ object Similarity {
                    maxImbalanceMicro: Long = 4000000L,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cells = ivfAssign(emb, nCentroids, 1, idCol, vecCol)
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -2314,33 +2257,27 @@ object Similarity {
               vecCol: String = "embedding"): DataFrame =
     sqTopK(corpus, queries, k, quantizeInt4(_, vecCol), idCol, vecCol)
 
-  /** Shared scalar-quantized scan core: quantize + reconstruct the
-    * corpus ONCE (eager checkpoint — the stored-form shape; see the
-    * [[sq8TopK]] projection-collapse note), exact queries, asymmetric
-    * 6-dp cosine, ties on cid. */
+  /** Shared scalar-quantized scan: [[bruteTopK]] over the corpus
+    * quantized and reconstructed ONCE (eager checkpoint — the
+    * stored-form shape; see the [[sq8TopK]] projection-collapse note)
+    * against exact queries — the asymmetric cosine. */
   private def sqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      quantizer: DataFrame => DataFrame,
-                     idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                     idCol: String, vecCol: String): DataFrame =
+    topKPerQuery(exactScan(reconstructed(corpus, quantizer, idCol, vecCol),
+      normed(queries, idCol, vecCol, "qid", "qv", "qn")), k)
+
+  /** The corpus side (cid, cv, cn) of a scalar-quantized scan: each
+    * vector quantized by `quantizer`, reconstructed, and pinned. */
+  private def reconstructed(corpus: DataFrame,
+                            quantizer: DataFrame => DataFrame,
+                            idCol: String, vecCol: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val c = quantizer(corpus.select(col(idCol).as("cid"), col(vecCol)))
+    quantizer(corpus.select(col(idCol).as("cid"), col(vecCol)))
       .select(col("cid"),
         dequantize(col("q_codes"), col("q_scale")).as("cv"))
       .withColumn("cn", norm(col("cv")))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val q = queries.select(col(idCol).as("qid"),
-        asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), round(sim, 6).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
   }
 
   /** Per-dimension binarization thresholds for [[bqTopK]]: the
@@ -2416,7 +2353,6 @@ object Similarity {
   def bqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
     val thr = bqThresholds(corpus, idCol, vecCol)
     val c = bqPack(corpus, thr, idCol, vecCol)
@@ -2428,13 +2364,9 @@ object Similarity {
       zip_with(col("qw"), col("cw"),
         (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
       lit(0L), (acc, x) => acc + x)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("hamming"), col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), hamming.as("hamming"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), hamming.as("hamming")),
+      k, col("hamming"))
   }
 
   /** [[refineUpliftStats]] with the BINARY scan as the first stage —
@@ -2574,31 +2506,18 @@ object Similarity {
                  nCentroids: Int = 16, nProbe: Int = 4,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     val cells = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
       .select(col("id"), col("centroid_id"))
     val probes = ivfProbes(corpus, queries, nCentroids, nProbe,
       idCol, vecCol)
-    val c = quantizeInt8(
-        corpus.select(col(idCol).as("cid"), col(vecCol)), vecCol)
-      .select(col("cid"),
-        dequantize(col("q_codes"), col("q_scale")).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val c = reconstructed(corpus, quantizeInt8(_, vecCol), idCol, vecCol)
     val cand = cells.join(broadcast(probes), Seq("centroid_id"))
       .select(col("qid"), col("qv"), col("qn"), col("id"))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    cand.join(c, col("id") === col("cid"))
+    topKPerQuery(cand.join(c, col("id") === col("cid"))
       .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), round(sim, 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+      .select(col("qid"), col("cid"),
+        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
+          .as("cos_sim")), k)
   }
 
   private def requireFlat(index: PqIndex, op: String): Unit =
@@ -2606,26 +2525,28 @@ object Similarity {
       s"$op needs a flat PQ index (from pqBuild); this one is IVF " +
         "(residual codes)")
 
+  /** The ADC tail of every PQ search: over `matched` rows, one per
+    * (query, candidate code, LUT entry) carrying qid, the candidate
+    * `id` and the entry's `dm`, the self pairs dropped, each pair's
+    * asymmetric distance summed (exact integers, so the sum is
+    * order-free; the ×m rows collapse map-side) and ranked ascending
+    * by [[topKPerQuery]]. Emits (qid, cid, adist, rank). */
+  private def adcTopK(matched: DataFrame, k: Int): DataFrame =
+    topKPerQuery(matched.filter(col("qid") =!= col("id"))
+      .groupBy(col("qid"), col("id").as("cid"))
+      .agg(sum(col("dm")).as("adist")), k, col("adist"))
+
   /** Flat ADC ranking tail over a prebuilt flat [[PqIndex]] — the
     * compressed linear scan of [[pqAdcTopK]] minus the build. */
   def pqAdcSearch(index: PqIndex, queries: DataFrame, k: Int,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     requireFlat(index, "pqAdcSearch")
     val codes = index.codes
     val lut = pqLut(queries, index.cents, index.m, index.dsub,
       idCol, vecCol)
-    val adist = codes.join(broadcast(lut),
-        codes("sub") === lut("sub") && codes("code") === lut("c_id"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy(col("qid"), col("id").as("cid"))
-      .agg(sum(col("dm")).as("adist"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist"), col("cid"))
-    adist.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    adcTopK(codes.join(broadcast(lut),
+      codes("sub") === lut("sub") && codes("code") === lut("c_id")), k)
   }
 
   /** IVF-blocked ADC ranking tail over a prebuilt flat [[PqIndex]]
@@ -2644,7 +2565,6 @@ object Similarity {
                   k: Int, nCentroids: Int = 16, nProbe: Int = 4,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     requireFlat(index, "ivfPqSearch")
     val cells = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
       .select(col("id"), col("centroid_id"))
@@ -2657,18 +2577,10 @@ object Similarity {
         col("c_id").as("lcode"), col("dm"))
     val cand = cells.join(broadcast(probes), Seq("centroid_id"))
       .select(col("qid"), col("id"))
-    val adist = index.codes.join(cand, Seq("id"))
+    adcTopK(index.codes.join(cand, Seq("id"))
       .join(broadcast(lut),
         col("qid") === col("lqid") && col("sub") === col("lsub") &&
-          col("code") === col("lcode"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy(col("qid"), col("id").as("cid"))
-      .agg(sum(col("dm")).as("adist"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist"), col("cid"))
-    adist.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+          col("code") === col("lcode")), k)
   }
 
   /** Flat-PQ ADC top-k search (FAISS `IndexPQ` semantics, Jégou et al.
@@ -2782,8 +2694,7 @@ object Similarity {
     * that cell are ranked by the m-term LUT sum of their codes. The
     * LUT is n_q × nProbe × m × kCodes rows — still kilobytes,
     * broadcast. Cell filtering runs before the ×m code expansion
-    * exactly as in [[ivfPqSearch]]; determinism (probe choice, argmin
-    * ties, integer sums, rank ties on cid) is unchanged. Serves
+    * exactly as in [[ivfPqSearch]]. Serves
     * ENTIRELY off the index (stored coarse seeds + cell assignment) —
     * the self-contained artifact shape, identical results to the old
     * recompute-from-corpus path for a fresh build, and the ONLY
@@ -2793,7 +2704,6 @@ object Similarity {
                        queries: DataFrame, k: Int, nProbe: Int = 4,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(index.ivf.isDefined,
       "residualPqSearch needs an IVF PQ index (from residualPqBuild); " +
         "this one is flat — search it with pqAdcSearch or ivfPqSearch")
@@ -2818,18 +2728,10 @@ object Similarity {
       .join(broadcast(probes.select(col("qid"), col("centroid_id"))),
         Seq("centroid_id"))
       .select(col("qid"), col("centroid_id"), col("id"))
-    val adist = index.codes.join(cand, Seq("id"))
+    adcTopK(index.codes.join(cand, Seq("id"))
       .join(broadcast(lut),
         col("qid") === col("lqid") && col("centroid_id") === col("lcell") &&
-          col("sub") === col("lsub") && col("code") === col("lcode"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy(col("qid"), col("id").as("cid"))
-      .agg(sum(col("dm")).as("adist"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist"), col("cid"))
-    adist.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+          col("sub") === col("lsub") && col("code") === col("lcode")), k)
   }
 
   /** Residual-vs-raw quantization uplift at EQUAL code budget, against
@@ -2887,26 +2789,15 @@ object Similarity {
   def refineTopK(corpus: DataFrame, queries: DataFrame,
                  shortlist: DataFrame, k: Int,
                  idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = corpus.select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    shortlist.select(col("qid"), col("cid"))
-      .join(c, Seq("cid"))
-      .join(broadcast(q), Seq("qid"))
+                 vecCol: String = "embedding"): DataFrame =
+    topKPerQuery(shortlist.select(col("qid"), col("cid"))
+      .join(normed(corpus, idCol, vecCol, "cid", "cv", "cn"), Seq("cid"))
+      .join(broadcast(normed(queries, idCol, vecCol, "qid", "qv", "qn")),
+        Seq("qid"))
       .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), round(sim, 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
-  }
+      .select(col("qid"), col("cid"),
+        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
+          .as("cos_sim")), k)
 
   /** IVF-PQ first stage at shortlist depth `r`, exact refine to `k` —
     * the composed retrieve-then-refine operator over a prebuilt index
@@ -3007,51 +2898,23 @@ object Similarity {
                      nCentroids: Int, nProbes: Seq[Int],
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nProbes.nonEmpty && nProbes == nProbes.sorted &&
       nProbes.distinct == nProbes && nProbes.head >= 1,
       "nProbes must be distinct, ascending, >= 1")
     val maxProbe = nProbes.max
     val assigned = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
-    // probe ranking with the rank RETAINED (ivfProbes drops it): the
-    // same 6-dp cosine + smallest-centroid-id tie convention
-    val cents = corpus
-      .select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .orderBy(col("c_id")).limit(nCentroids)
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val cdenom = col("qn") * col("cn")
-    val csim = when(cdenom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / cdenom)
-    val cw = Window.partitionBy(col("qid"))
-      .orderBy(col("_csim").desc, col("c_id"))
-    val probes = q.join(broadcast(cents), lit(true))
-      .withColumn("_csim", round(csim, 6))
-      .withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= maxProbe)
-      .select(col("qid"), col("qv"), col("qn"),
-        col("c_id").as("centroid_id"), col("crk"))
     // ONE scored candidate pass at maxProbe, probe rank riding along —
     // |Q|·(maxProbe/nCentroids)·n skinny rows, eagerly pinned for the
     // per-point consumers (documented checkpoint class)
-    val denom = col("qn") * col("nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("v")) / denom)
-    val scored = assigned.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("cid"),
-        round(sim, 6).as("cos_sim"), col("crk"))
+    val scored = probedScores(assigned,
+        ivfProbes(corpus, queries, nCentroids, maxProbe, idCol, vecCol),
+        "centroid_id", col("_crk").as("crk"))
       .localCheckpoint(true)
     val exact = bruteTopK(corpus, queries, k, idCol, vecCol)
       .select(col("qid"), col("cid")).localCheckpoint(true)
     val rows = nProbes.map { p =>
       val candP = scored.filter(col("crk") <= p)
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos_sim").desc, col("cid"))
-      val topk = candP.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("cid"))
+      val topk = topKPerQuery(candP, k).select(col("qid"), col("cid"))
       val hits = exact.join(topk, Seq("qid", "cid"), "left_semi")
       // 1-row broadcast scalar attachments (the sanctioned crossJoin
       // class) — each side is a full-frame aggregate
@@ -3092,7 +2955,6 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb.select(col(labelCol).as("label"), col(idCol).as("id"),
       asDouble(col(vecCol)).as("v"))
     val cents = e.groupBy(col("label"))
@@ -3388,32 +3250,19 @@ object Similarity {
     * quantizer convention): seeds must not depend on the filter, or
     * every distinct predicate would imply a different index.
     *
-    * Determinism: same 6-dp cosine / smallest-cid tie conventions as
-    * [[ivfTopK]]. Emits (qid, cid, cos_sim, rank), rank over the
+    * It is [[ivfTopK]] over the allowlisted members of the
+    * assignment. Emits (qid, cid, cos_sim, rank), rank over the
     * FILTERED candidate set. */
   def filteredIvfTopK(corpus: DataFrame, queries: DataFrame,
                       allowed: DataFrame, k: Int,
                       nCentroids: Int = 16, nProbe: Int = 4,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val assigned = ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
-      .join(allowed.select(col(idCol).as("id")).distinct(),
-        Seq("id"), "left_semi")
-    val probes = ivfProbes(corpus, queries, nCentroids, nProbe,
-      idCol, vecCol)
-    val denom = col("qn") * col("nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("v")) / denom)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    assigned.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("cid"), round(sim, 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
-  }
+                      vecCol: String = "embedding"): DataFrame =
+    ivfRerank(ivfAssign(corpus, nCentroids, 1, idCol, vecCol)
+        .join(allowed.select(col(idCol).as("id")).distinct(),
+          Seq("id"), "left_semi"),
+      ivfProbes(corpus, queries, nCentroids, nProbe, idCol, vecCol),
+      "centroid_id", k)
 
   /** Recall gate for [[filteredIvfTopK]] against the filtered-brute
     * yardstick (exact top-k over the allowlisted corpus — the answer
@@ -3478,32 +3327,19 @@ object Similarity {
                   nShards: Int = 8,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nShards >= 1, "nShards must be >= 1")
-    val c = corpus.select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
+    val c = normed(corpus, idCol, vecCol, "cid", "cv", "cn")
       .withColumn("shard", pmod(col("cid"), lit(nShards.toLong)))
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val denom = col("qn") * col("cn")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("qv"), col("cv")) / denom)
-    // scatter: per-(query, shard) local top-k
+    // scatter: per-(query, shard) local top-k — partitioned by shard
+    // too, so it is not the per-query tail
     val wLocal = Window.partitionBy(col("qid"), col("shard"))
       .orderBy(col("cos_sim").desc, col("cid"))
-    val shardWinners = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("shard"),
-        round(sim, 6).as("cos_sim"))
+    val shardWinners = exactScan(c,
+        normed(queries, idCol, vecCol, "qid", "qv", "qn"), col("shard"))
       .withColumn("lrank", row_number().over(wLocal))
       .filter(col("lrank") <= k)
     // gather: merge |Q|·S·k winners into the global top-k
-    val wGlobal = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("cid"))
-    shardWinners
-      .select(col("qid"), col("cid"), col("cos_sim"))
-      .withColumn("rank", row_number().over(wGlobal))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    topKPerQuery(shardWinners.select(col("qid"), col("cid"), col("cos_sim")), k)
   }
 
   /** Per-vector k-nearest-neighbors WITHIN IVF blocks — the top-k
@@ -3517,12 +3353,9 @@ object Similarity {
   def knnWithinBlocks(emb: DataFrame, k: Int, nCentroids: Int = 16,
                       nAssign: Int = 2, idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val assigned = ivfAssign(emb, nCentroids, nAssign, idCol, vecCol)
       .localCheckpoint()
-    val denom = col("a.nrm") * col("b.nrm")
-    val sim = when(denom === 0.0, 0.0)
-      .otherwise(dot(col("a.v"), col("b.v")) / denom)
+    val sim = cosine(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
     val w = Window.partitionBy(col("id"))
       .orderBy(col("cos_sim").desc, col("nid"))
     assigned.as("a").join(assigned.as("b"),

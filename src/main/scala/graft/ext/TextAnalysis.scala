@@ -484,13 +484,15 @@ object TextAnalysis {
         .localCheckpoint()
       merges = merges :+ best.select(lit(it.toLong).as("iter"), col("l"),
         col("r"), concat(col("l"), col("r")).as("merged"), col("cnt"))
-      vocabs :+= vocabs.last.crossJoin(broadcast(best.select(
-          col("l").as("_l"), col("r").as("_r"))))
-        .select(col("word"), col("wc"),
-          replace(col("syms"),
-            concat(lit(" "), col("_l"), lit(" "), col("_r"), lit(" ")),
-            concat(lit(" "), col("_l"), col("_r"), lit(" "))).as("syms"))
-        .localCheckpoint()
+      // the last iteration's rewrite would have no reader
+      if (it < iters)
+        vocabs :+= vocabs.last.crossJoin(broadcast(best.select(
+            col("l").as("_l"), col("r").as("_r"))))
+          .select(col("word"), col("wc"),
+            replace(col("syms"),
+              concat(lit(" "), col("_l"), lit(" "), col("_r"), lit(" ")),
+              concat(lit(" "), col("_l"), col("_r"), lit(" "))).as("syms"))
+          .localCheckpoint()
     }
     val out = Dedup.finishLocal(
       merges.reduce(_ union _).orderBy(col("iter")), df)

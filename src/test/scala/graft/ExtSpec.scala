@@ -2306,4 +2306,56 @@ class ExtSpec extends SparkSpec {
     assert(got.head.getLong(3) ===
       got.head.getLong(2) * 1000000L / totalSlots)
   }
+
+  test("every search ranks a 6-dp cosine tie and an equal ADC distance " +
+      "by the smaller cid") {
+    // query 100 scores 9 and 4 at exactly 1/√2 (listed larger id
+    // first), and 8 and 7 are one vector, so any PQ index codes them
+    // alike and every query sees one ADC distance for both
+    val corpus = Seq(
+      (9L, Array(1.0f, 1.0f, 0.0f, 0.0f)),
+      (4L, Array(1.0f, 0.0f, 1.0f, 0.0f)),
+      (3L, Array(0.9f, 0.1f, 0.0f, 0.0f)),
+      (2L, Array(0.0f, 0.0f, 1.0f, 1.0f)),
+      (6L, Array(0.5f, 0.5f, 0.5f, 0.5f)),
+      (8L, Array(0.3f, 0.8f, 0.2f, 0.1f)),
+      (7L, Array(0.3f, 0.8f, 0.2f, 0.1f)))
+      .toDF("vec_id", "embedding")
+    val queries = Seq((100L, Array(1.0f, 0.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "cid", "cos_sim", "rank").collect().toSeq
+    val brute = ranked(Similarity.bruteTopK(corpus, queries, 3))
+    assert(brute.map(_.getLong(1)) === Seq(3L, 4L, 9L))
+    assert(brute(1).getDouble(2) === brute(2).getDouble(2))
+    val allPairs = queries.select(col("vec_id").as("qid"))
+      .crossJoin(corpus.select(col("vec_id").as("cid")))
+    val others = Seq(
+      "prefixTopK" -> Similarity.prefixTopK(corpus, queries, 3, prefixDims = 4),
+      "shardedTopK" -> Similarity.shardedTopK(corpus, queries, 3, nShards = 3),
+      "ivfTopK" -> Similarity.ivfTopK(corpus, queries, 3,
+        nCentroids = 2, nProbe = 2),
+      "filteredIvfTopK" -> Similarity.filteredIvfTopK(corpus, queries,
+        corpus, 3, nCentroids = 2, nProbe = 2),
+      "refineTopK" -> Similarity.refineTopK(corpus, queries, allPairs, 3))
+    others.foreach { case (name, df) =>
+      assert(ranked(df) === brute, name)
+    }
+    val flat = Similarity.pqBuild(corpus, m = 2, dsub = 2, kCodes = 2)
+    val ivf = Similarity.residualPqBuild(corpus, nCentroids = 2, m = 2,
+      dsub = 2, kCodes = 2)
+    Seq(
+      "pqAdcSearch" -> Similarity.pqAdcSearch(flat, queries, 7),
+      "ivfPqSearch" -> Similarity.ivfPqSearch(flat, corpus, queries, 7,
+        nCentroids = 2, nProbe = 2),
+      "residualPqSearch" -> Similarity.residualPqSearch(ivf, queries, 7,
+        nProbe = 2)).foreach { case (name, df) =>
+      val byCid = df.collect().map(r =>
+        r.getAs[Long]("cid") -> (r.getAs[Long]("adist"), r.getAs[Int]("rank")))
+        .toMap
+      assert(byCid.size === 7, name)
+      assert(byCid(7L)._1 === byCid(8L)._1, name)
+      assert(byCid(7L)._2 + 1 === byCid(8L)._2, name)
+    }
+  }
 }

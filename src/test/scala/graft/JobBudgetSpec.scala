@@ -19,7 +19,9 @@ import graft.jobs.CurationJob
   * PQ training finished on the driver (3, 11, 7, 18; 16, 28, 42, 73,
   * 37 in this suite's session; distributed training alone ran 14, 22,
   * 19, 29; 16, 28, 52, 83, 59), and the four memos together at or
-  * below half of their 84 distributed-only jobs. */
+  * below half of their 84 distributed-only jobs. BPE training with
+  * three merges stays at the 16 jobs it runs without rewriting the
+  * vocabulary after its last merge (18 with that rewrite). */
 class JobBudgetSpec extends SparkSpec {
   private val dir = new java.io.File(sf("documents")).getParent
 
@@ -83,6 +85,14 @@ class JobBudgetSpec extends SparkSpec {
         "CurationJob.run" -> (75, jobs(CurationJob.run(s,
           s"$dir/documents.parquet", out.toString))))
         .map { case (item, (before, now)) => item -> (before / 2, now) })
+    }
+  }
+
+  test("job budgets: bpeMerges(iters = 3) at sf0.001") {
+    withJobCount { (s, jobs) =>
+      val docs = Tables.documents(s, dir)
+      assertBudgets(Seq("bpeMerges(iters = 3)" ->
+        (16, jobs(graft.ext.TextAnalysis.bpeMerges(docs, iters = 3)))))
     }
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -48,6 +50,34 @@ class SessionMemoSpec extends SparkSpec {
       assert((persisted -- before).nonEmpty)
     }
     assert(left === Set.empty[Int])
+  }
+
+  /** The listeners on the context's bus. The accessors are Spark-
+    * internal, so they are read reflectively. */
+  private def busListeners: Seq[AnyRef] = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[AnyRef]].asScala.toSeq
+  }
+
+  test("evictSession removes the session's eviction listener: " +
+      "cycling sessions leaves the bus and the hooked set at baseline") {
+    val hookedBefore = SessionMemo.listeners.keySet
+    val cycles = (1 to 3).map { _ =>
+      val s = spark.newSession()
+      SparkEntry.sharedComponents(s, dir)
+      val hook = SessionMemo.listeners(s)
+      assert(busListeners.contains(hook))
+      SparkEntry.evictSession(s)
+      (hook, busListeners.size)
+    }
+    val (hooks, busSizes) = cycles.unzip
+    assert(hooks.distinct.size === 3)
+    assert(hooks.forall(h => !busListeners.contains(h)))
+    // a cycled session leaves no listener on the bus
+    assert(busSizes.distinct.size === 1)
+    assert(SessionMemo.listeners.keySet === hookedBefore)
   }
 
   test("concurrent first hits on a cold sharedComponents share one build") {
